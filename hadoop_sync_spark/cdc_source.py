@@ -112,6 +112,33 @@ def _const_array(value, n: int, typ):
     return pa.repeat(pa.scalar(value, type=typ), n)
 
 
+def _conform_key(da, typ, dpath: str, key: str):
+    """Cast an equality-delete key column ``da`` to the data column's
+    ``typ``.  A conforming delete file carries the key at the schema's
+    type or one it was promoted from (int -> long, float -> double), so
+    only casts within one kind of type are made; anything else raises a
+    ValueError naming the file, the key and both types."""
+    import pyarrow as pa
+
+    def kind(t):
+        for k in ("integer", "floating", "decimal", "string",
+                  "large_string", "binary", "boolean", "date",
+                  "timestamp"):
+            if getattr(pa.types, f"is_{k}")(t):
+                return k.replace("large_", "")
+        return str(t)
+
+    if kind(da.type) == kind(typ):
+        try:
+            return da.cast(typ)
+        except pa.ArrowInvalid:
+            pass
+    raise ValueError(
+        f"equality delete {dpath!r}: key column {key!r} is {da.type}, "
+        f"the data column is {typ} — not a conforming key type"
+    )
+
+
 @dataclass
 class _CDCPart(InputPartition):
     """One file of one commit: everything an executor needs to emit
@@ -1021,10 +1048,8 @@ class _IceIncStreamReader(DataSourceStreamReader):
                         # identity-partition key: metadata-only value
                         ca = _const_array(p.pv.get(kn), n, da.type)
                     if da.type != ca.type:
-                        # a conforming delete file carries the key at
-                        # the schema's (possibly pre-promotion) type;
                         # unify on the data side, as read() casts
-                        da = da.cast(ca.type)
+                        da = _conform_key(da, ca.type, dpath, kn)
                     del_arrs.append(da)
                     data_arrs.append(ca)
                 if not del_arrs:

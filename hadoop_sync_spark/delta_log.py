@@ -58,6 +58,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 from pyspark.sql.types import StructType
 
+from hadoop_sync_spark import rowlevel
+from hadoop_sync_spark.io import decode_file_uri
+
 # ----------------------------------------------------- deletion vectors (r8)
 #: RFC 1924 Base85 alphabet — the character set Delta's DV descriptors
 #: use for inline vectors and the path UUID (PROTOCOL.md "Deletion
@@ -446,6 +449,21 @@ def _protocol_with_feature(proto: dict, feature: str) -> dict:
 
 def _upgrade_protocol_for_v2_checkpoint(proto: dict) -> dict:
     return _protocol_with_feature(proto, "v2Checkpoint")
+
+
+def _dv_protocol(snap, cdc: bool) -> dict:
+    """The protocol a deletion-vector-writing commit carries: the
+    ``deletionVectors`` feature, plus the ``changeDataFeed`` writer
+    feature when the commit writes change data.  The upgrade keeps
+    legacy-implied features listed (a column-mapped table at reader 2
+    must keep ``columnMapping`` at reader 3)."""
+    proto = _protocol_with_feature(
+        snap.protocol or {"minReaderVersion": 1, "minWriterVersion": 2},
+        "deletionVectors",
+    )
+    if cdc:
+        return _protocol_with_writer_feature(proto, "changeDataFeed")
+    return proto
 
 
 #: PROTOCOL.md primitive names that differ from Spark's JSON names
@@ -1776,8 +1794,8 @@ class DeltaLog:
         ``u`` writes the framed ``deletion_vector_<uuid>.bin`` (CRC'd
         portable Roaring, deterministic uuid per the
         no-ambient-randomness rule), ``i`` inlines the Base85 payload.
-        Shared by :meth:`add_deletion_vector` (one file per commit) and
-        :meth:`delete_where` (every affected file in ONE commit)."""
+        Shared by :meth:`add_deletion_vector` and the DML faces'
+        driver tier."""
         data = _dv_serialize(sorted(set(positions)))
         if storage == "i":
             pad = (-len(data)) % 4
@@ -1823,67 +1841,41 @@ class DeltaLog:
         prev = dict(snap.live[rel_path])
         new_add = dict(prev)
         new_add["deletionVector"] = desc
-        # upgrade preserves legacy-implied features: a column-mapped
-        # table (reader 2) must keep columnMapping LISTED at reader 3
-        # or conforming readers refuse the table (spec upgrade rule)
-        proto = _protocol_with_feature(
-            snap.protocol or {"minReaderVersion": 1, "minWriterVersion": 2},
-            "deletionVectors",
-        )
         self.commit(
             version,
             [
-                {"protocol": proto},
+                {"protocol": _dv_protocol(snap, False)},
                 {"remove": {"path": rel_path, "dataChange": True}},
                 {"add": new_add},
             ],
         )
         return desc
 
-    #: driver-tier materialization bound for the DML write faces'
-    #: matched (file, position) pairs — the WRITE-side analogue of the
-    #: read path's decode tiers.  At or under it, positions collect and
-    #: the bitmaps build driver-side (cheapest at fixture scale: no
-    #: extra Spark job).  ABOVE it (round 12) the faces switch to the
-    #: EXECUTOR tier: the matched frame stays distributed, per-file
-    #: Roaring bitmaps serialize and write from the workers
-    #: (:meth:`_dv_build_distributed`), and the driver handles one
-    #: descriptor row per affected file — metadata scale at any
-    #: predicate selectivity.
-    DELETE_WHERE_ROW_LIMIT = 1_000_000
-
-    #: separate driver cap for read_changes' DV position diffs — the
-    #: CDC face derives row-level events by decoding DV pairs
-    #: driver-side, an independent axis from the write faces' matched
-    #: sets (round 12 split: forcing the write faces onto their
-    #: executor tier must not also cripple CDC reads)
+    #: separate driver cap for read_changes' DV position diffs: the CDC
+    #: face decodes DV pairs on the driver, an axis independent of the
+    #: write faces' tier crossover (:data:`rowlevel.DRIVER_ROW_LIMIT`)
     READ_CHANGES_ROW_LIMIT = 1_000_000
 
-    #: merge key-match strategy threshold (round 12, measured): at or
-    #: under this many distinct source keys the key scan takes a
-    #: literal IN filter (pushed to the parquet scan, row-group stats
-    #: prune — the win that matters when a tiny CDC batch lands on a
-    #: huge table); above it, a semi-join against the distinct-keys
-    #: frame.  Measured on the proxy grid: a 10k-literal IN cost 4x
-    #: the 1k one in planning alone, and even the 1k IN (1.9 s) lost
-    #: to the 10k semi-join (0.9 s) — the literal-tree cost swamps the
-    #: pruning payoff well below 1k keys, so the threshold sits at the
-    #: size where an IN list is still plan-trivial
+    #: merge key-match strategy threshold: at or under this many distinct
+    #: source keys the key scan takes a literal IN filter (pushed to the
+    #: parquet scan, row-group stats prune); above it, a semi-join
+    #: against the distinct-keys frame.  Measured on the proxy grid: a
+    #: 10k-literal IN cost 4x the 1k one in planning alone, and even the
+    #: 1k IN (1.9 s) lost to the 10k semi-join (0.9 s)
     MERGE_IN_PUSHDOWN_KEY_LIMIT = 128
 
     def _resolve_physical(self, snap: Snapshot, face: str) -> dict:
         """logical name -> physical column for the DML write faces
         (``none`` is identity, ``name`` rides the metadata
-        physicalName).  ``id`` mode (round 13, lifting the r12
-        refusal) resolves per-FOOTER exactly like the read path: walk
-        live files' footers by field id with the same early exit —
-        the incumbent names win, so new files stay consistent with
-        what conforming external writers already stamped; field ids
-        no live footer carries (added columns, empty tables) fall
-        back to the metadata physicalName, the name this writer's own
-        stamped-footer files then establish.  Writers pair this with
-        :meth:`_phys_field_meta` so id-mode output files carry footer
-        field ids themselves (the compact path's discipline)."""
+        physicalName).  ``id`` mode resolves per-FOOTER exactly like
+        the read path: walk live files' footers by field id with the
+        same early exit — the incumbent names win, so new files stay
+        consistent with what conforming external writers already
+        stamped; field ids no live footer carries (added columns,
+        empty tables) fall back to the metadata physicalName, the name
+        this writer's own stamped-footer files then establish.  Writers
+        pair this with :meth:`_phys_field_meta` so id-mode output files
+        carry footer field ids themselves."""
         schema = snap.schema()
         if schema is None:
             raise ValueError("no metaData action in the log")
@@ -1980,7 +1972,7 @@ class DeltaLog:
             for n in names
         ]
 
-    def _matched_per_file(
+    def _match(
         self,
         spark: SparkSession,
         snap: Snapshot,
@@ -1989,39 +1981,21 @@ class DeltaLog:
         in_filter: tuple | None = None,
         in_frame: tuple | None = None,
     ):
-        """Shared DML matcher: scan ONLY the predicate columns with
-        per-file row lineage (pinned physical schema, so pre-DDL files
-        null-fill — NULL fails every range predicate, SQL semantics)
-        and return ``(phys, per_file, frame)``:
-
-        - ``(phys, {rel_path: {positions}}, None)`` when the matched
-          set fits :data:`DELETE_WHERE_ROW_LIMIT` — the driver tier,
-          cheapest at fixture scale;
-        - ``(phys, None, matched_df)`` when it does NOT — the EXECUTOR
-          tier (round 12): the ``(_fp, _pos)`` frame stays distributed
-          and the caller builds the per-file deletion vectors with
-          :meth:`_dv_build_distributed`, never materializing positions
-          on the driver;
-        - ``(phys, None, None)`` when the table is empty or nothing
-          matches.
-
-        ``column_filter`` is the ``{col: (lo, hi)}`` range form;
-        ``in_filter`` is an optional ``(col, values)`` membership
-        predicate (the merge face's key match, IN-pushed to the scan);
-        ``in_frame`` is its over-cap twin ``(col, keys_df)`` — a
-        one-column DataFrame semi-joined against the scan when the key
-        set itself is too large for an IN list.  Guards:
-        unknown/partition predicate columns."""
-
-        from hadoop_sync_spark.io import decode_file_uri
-
+        """The faces' predicate scan (:func:`rowlevel.predicate_scan`)
+        over the live files, pinned to the physical schema so pre-DDL
+        files null-fill, and tiered by :func:`rowlevel.match`.  Returns
+        ``(phys, matched)``; ``matched`` is None when the table is empty
+        or nothing matches.  Refuses unknown and partition predicate
+        columns, and partitioned tables whose adds carry no
+        partitionValues: the read path refuses deletion vectors over
+        Hive-inferred partition layouts, so a DV there would make the
+        table unreadable."""
         if not column_filter and in_filter is None and in_frame is None:
             raise ValueError(f"{face} needs a predicate")
         pred_cols = dict(column_filter)
-        if in_filter is not None:
-            pred_cols.setdefault(in_filter[0], None)
-        if in_frame is not None:
-            pred_cols.setdefault(in_frame[0], None)
+        for extra in (in_filter, in_frame):
+            if extra is not None:
+                pred_cols.setdefault(extra[0], None)
         schema = snap.schema()
         phys = self._resolve_physical(snap, face)
         for c in pred_cols:
@@ -2035,12 +2009,10 @@ class DeltaLog:
                 )
         sel = list(snap.files)
         if not sel:
-            return phys, None, None
+            return phys, None
         if snap.partition_columns:
             # partitionValues keys are PHYSICAL names under column
-            # mapping (the spec; tolerate logical for lax writers) —
-            # comparing logical names alone would falsely refuse every
-            # conforming mapped partitioned table (round-11 review)
+            # mapping (the spec; tolerate logical for lax writers)
             logical = set(snap.partition_columns)
             physical = {phys.get(c, c) for c in snap.partition_columns}
             if not all(
@@ -2048,98 +2020,40 @@ class DeltaLog:
                 or logical <= set(a.get("partitionValues") or {})
                 for a in snap.live.values()
             ):
-                # a DV written here would make the table UNREADABLE:
-                # the read path refuses deletion vectors over
-                # Hive-inferred (value-less) partition layouts
                 raise NotImplementedError(
                     f"{face} on a partitioned table whose adds carry "
                     "no partitionValues (Hive-inferred layout): "
                     "deletion vectors need the logged values — re-log "
                     "the adds"
                 )
-        files = [os.path.join(self.table_dir, p) for p in sel]
         pred_schema = T.StructType([
             T.StructField(phys[c], schema[c].dataType, True)
             for c in pred_cols
         ])
-        scan = spark.read.schema(pred_schema).parquet(*files).select(
-            F.col("_metadata.file_path").alias("_fp"),
-            F.col("_metadata.row_index").alias("_pos"),
-            *[F.col(phys[c]).alias(c) for c in pred_cols],
+        pairs = rowlevel.predicate_scan(
+            spark, [os.path.join(self.table_dir, p) for p in sel],
+            pred_schema, {c: F.col(phys[c]) for c in pred_cols},
+            column_filter, in_filter, in_frame,
         )
-        for c, (lo, hi) in column_filter.items():
-            if lo is not None:
-                scan = scan.filter(F.col(c) >= lo)
-            if hi is not None:
-                scan = scan.filter(F.col(c) <= hi)
-        if in_filter is not None:
-            scan = scan.filter(F.col(in_filter[0]).isin(in_filter[1]))
-        if in_frame is not None:
-            kc, keys_df = in_frame
-            scan = scan.join(
-                keys_df.toDF(kc), on=kc, how="leftsemi"
-            )
-        # limit(cap+1) so the CAP bounds what the driver materializes —
-        # a collect-then-check would have built the whole oversized
-        # list before deciding the tier (round-11 review)
-        cap = self.DELETE_WHERE_ROW_LIMIT
-        pairs = scan.select("_fp", "_pos")
-        matched = pairs.limit(cap + 1).collect()
-        if not matched:
-            return phys, None, None
-        if len(matched) > cap:
-            # EXECUTOR tier (round 12): hand the distributed frame back
-            # — the caller builds per-file bitmaps executor-side
-            # instead of refusing (the round-11 behavior)
-            return phys, None, pairs
-
-        _decode = decode_file_uri
-        rel_of = {
-            os.path.abspath(os.path.join(self.table_dir, p)): p
+        path_of = {
+            p: os.path.abspath(os.path.join(self.table_dir, p))
             for p in sel
         }
-        per_file: dict[str, set[int]] = {}
-        for r in matched:
-            rel = rel_of.get(_decode(r._fp))
-            if rel is None:
-                raise ValueError(
-                    f"scanned file missing from the snapshot map "
-                    f"(URI normalization mismatch): {r._fp}"
-                )
-            per_file.setdefault(rel, set()).add(r._pos)
-        return phys, per_file, None
+        return phys, rowlevel.match(pairs, path_of)
 
     def _dv_build_distributed(
-        self,
-        snap: Snapshot,
-        frame: DataFrame,
-        version: int,
-        storage: str,
-        face: str,
+        self, snap: Snapshot, frame: DataFrame, version: int
     ) -> list:
-        """EXECUTOR-side deletion-vector build (round 12 — the scale
-        path the round-11 cap refusal named): group the matched
+        """Executor-side deletion-vector build: group the matched
         ``(_fp, _pos)`` frame by file and, per file, decode the
         existing DV, union, serialize the portable Roaring payload and
-        write the framed ``.bin`` FROM THE EXECUTOR (shared storage on
-        a real cluster; the uuid is deterministic per (file, version)
-        so the committing driver re-derives the descriptor path without
-        shipping payloads back).  The driver materializes ONE row per
-        affected file — metadata scale, same as the log commit itself —
-        so a predicate matching 100M rows costs the driver nothing
-        beyond the actions it must write anyway.  Returns the non-noop
-        rows ``(rel, fresh, cardinality, size)`` sorted by path.
-        Files whose matches are all already deleted write nothing.
-        Only ``u`` storage: an inline (``i``) vector of over-cap size
-        inside a JSON log line is pathological, so it refuses."""
-        if storage != "u":
-            raise NotImplementedError(
-                f"{face}: matched set exceeds the driver tier and "
-                f"storage {storage!r} was requested — over-cap "
-                "deletion vectors are file-backed ('u') only"
-            )
-        from hadoop_sync_spark.io import decode_file_uri
-
+        write the framed ``.bin`` from the executor (the uuid is
+        deterministic per (file, version), so the committing driver
+        re-derives the descriptor path without shipping payloads
+        back).  The driver materializes one row per affected file.
+        Returns the rows ``(rel, fresh, cardinality, size)`` sorted by
+        path; files whose matches are all already deleted write
+        nothing and return no row."""
         table_dir = self.table_dir
         live_info = {
             os.path.abspath(os.path.join(table_dir, rel)): (
@@ -2212,194 +2126,115 @@ class DeltaLog:
             actions.append({"add": prev})
         return actions
 
+    def _union_dvs(self, spark, snap: Snapshot, matched, version: int,
+                   fresh_rows: bool):
+        """Union the ``matched`` positions into each affected file's
+        deletion vector.  Returns ``(actions, fresh, n)``: the
+        remove/add pairs, the matched set minus the rows existing DVs
+        already delete (over the affected files only) and its row
+        count.  Files whose matches are all deleted already get no new
+        DV.  On the executor tier the bitmaps build on the workers, and
+        ``fresh`` carries the persisted fresh-row frame only when
+        ``fresh_rows`` asks for it; the caller releases it."""
+        if matched.per_file is not None:
+            actions: list[dict] = []
+            fresh: dict[str, set[int]] = {}
+            for rel in sorted(matched.per_file):
+                prev = dict(snap.live[rel])
+                desc = prev.get("deletionVector")
+                existing = set(self._dv_positions(desc)) if desc else set()
+                poss = matched.per_file[rel] - existing
+                if not poss:
+                    continue
+                fresh[rel] = poss
+                prev["deletionVector"] = self._dv_descriptor(
+                    rel, sorted(existing | poss), version
+                )
+                actions.append(
+                    {"remove": {"path": rel, "dataChange": True}}
+                )
+                actions.append({"add": prev})
+            return (actions,
+                    rowlevel.Matched(matched.path_of, per_file=fresh),
+                    sum(len(v) for v in fresh.values()))
+        fresh = rowlevel.Matched(matched.path_of)
+        frame = matched.frame
+        if fresh_rows:
+            fresh.frame = self._fresh_frame(spark, snap, frame).persist()
+            frame = fresh.frame.select("_fp", "_pos")
+        try:
+            rows = self._dv_build_distributed(snap, frame, version)
+        except BaseException:
+            fresh.release()
+            raise
+        fresh.files = [r.rel for r in rows]
+        return (self._dv_actions_for(snap, rows, version), fresh,
+                sum(r.fresh for r in rows))
+
     def delete_where(
         self,
         spark: SparkSession,
         column_filter: dict,
         now_ms: int = 0,
-        storage: str = "u",
     ) -> dict:
-        """Row-level ``DELETE FROM t WHERE ...`` the way production
-        Delta's DV writer does it — MERGE-ON-READ, no data rewrite:
-        scan ONLY the predicate columns (column-pruned, pushed-down)
-        with per-file row lineage, union the matched positions into
-        each affected file's existing deletion vector, and commit every
-        re-add in ONE version.  ``column_filter`` is the engine's
-        ``{col: (lo, hi)}`` range form (half-open ok), conjunctive
-        across columns, and reaches the parquet scan as a pushed
-        filter.  Positions an existing DV already covers are subtracted
-        before counting, so ``rows_deleted`` counts NEW deletions only
-        and a no-op predicate commits nothing.  Supports unmapped and
-        column-mapped tables: name-mode predicates resolve through the
-        metadata physicalName, id-mode (round 13) per-footer like the
-        read path.
-        Matched rows above :data:`DELETE_WHERE_ROW_LIMIT` switch to the
-        EXECUTOR tier (round 12): the matched frame stays distributed,
-        each affected file's bitmap unions, serializes and writes from
-        the executors (:meth:`_dv_build_distributed`), and the driver
-        handles only per-file descriptor rows — so a 100 TB-scale
-        purge predicate commits instead of refusing."""
+        """Row-level ``DELETE FROM t WHERE ...``, merge-on-read: the
+        matched positions union into each affected file's deletion
+        vector and every re-add commits in ONE version; no data file is
+        rewritten.  ``column_filter`` is the ``{col: (lo, hi)}`` range
+        form (either bound may be None), conjunctive across columns and
+        pushed to the parquet scan of the predicate columns only.
+        Rows an existing DV already deletes do not count, so
+        ``rows_deleted`` counts new deletions and a predicate with no
+        new match commits nothing.  Unmapped and column-mapped tables
+        are supported (name mode through the metadata physicalName, id
+        mode per footer like the read path).  On a change-data-feed
+        table the deleted rows are written as ``delete`` change data.
+        Returns ``{version, files, rows_deleted}``."""
         snap = self.snapshot()
-        phys, per_file, frame = self._matched_per_file(
+        phys, matched = self._match(
             spark, snap, column_filter, "delete_where"
         )
         noop = {"version": None, "files": 0, "rows_deleted": 0}
-        if per_file is None and frame is None:
+        if matched is None:
             return noop
         version = self.latest_version() + 1
         cdf = self._cdf_enabled(snap)
-        proto = _protocol_with_feature(
-            snap.protocol
-            or {"minReaderVersion": 1, "minWriterVersion": 2},
-            "deletionVectors",
+        dv_actions, fresh, n = self._union_dvs(
+            spark, snap, matched, version, fresh_rows=cdf
         )
-        if cdf:
-            proto = _protocol_with_writer_feature(
-                proto, "changeDataFeed"
-            )
-        actions: list[dict] = [
-            {"commitInfo": {"timestamp": now_ms, "operation": "DELETE"}},
-            {"protocol": proto},
-        ]
-        if frame is not None:
-            fresh_df = None
+        try:
+            if not n:
+                return noop
+            actions = [
+                {"commitInfo": {"timestamp": now_ms,
+                                "operation": "DELETE"}},
+                {"protocol": _dv_protocol(snap, cdf)},
+                *dv_actions,
+            ]
             if cdf:
-                # CDC needs the FRESH set as a frame (matched minus
-                # already-deleted) so the capture never re-reports
-                # rows an earlier delete already covered
-                fresh_df = self._fresh_frame(spark, snap, frame)
-                fresh_df.persist()
-                frame = fresh_df.select("_fp", "_pos")
-            try:
-                rows = self._dv_build_distributed(
-                    snap, frame, version, storage, "delete_where"
-                )
-                if not rows:
-                    return noop
-                actions.extend(
-                    self._dv_actions_for(snap, rows, version)
-                )
-                if cdf:
-                    groups = self._partition_groups(
-                        snap, [r.rel for r in rows]
-                    )
-
-                    def select_pairs(spark_, rels):
-                        abs_paths = [
-                            os.path.abspath(
-                                os.path.join(self.table_dir, r)
-                            )
-                            for r in rels
-                        ]
-                        return fresh_df.where(
-                            F.col("_afp").isin(abs_paths)
-                        ).select("_afp", "_pos")
-
-                    actions.extend(self._write_cdc_files(
-                        spark, version,
-                        self._cdc_capture_matched(
-                            spark, snap, phys, groups, select_pairs,
-                            "delete",
-                        ),
-                    ))
-                self.commit(version, actions)
-                return {
-                    "version": version,
-                    "files": len(rows),
-                    "rows_deleted": sum(r.fresh for r in rows),
-                }
-            finally:
-                if fresh_df is not None:
-                    fresh_df.unpersist()
-        new_rows = 0
-        fresh_sets: dict[str, set[int]] = {}
-        for rel in sorted(per_file):
-            prev = dict(snap.live[rel])
-            existing: set[int] = set()
-            if prev.get("deletionVector"):
-                existing = set(self._dv_positions(prev["deletionVector"]))
-            fresh = per_file[rel] - existing
-            if not fresh:
-                continue  # every match was already deleted
-            fresh_sets[rel] = fresh
-            new_rows += len(fresh)
-            desc = self._dv_descriptor(
-                rel, sorted(existing | per_file[rel]), version, storage
-            )
-            prev["deletionVector"] = desc
-            actions.append({"remove": {"path": rel, "dataChange": True}})
-            actions.append({"add": prev})
-        if new_rows == 0:
-            return {"version": None, "files": 0, "rows_deleted": 0}
-        n_dv = (len(actions) - 2) // 2
-        if cdf:
-            groups = self._partition_groups(snap, fresh_sets)
-
-            def select_pairs(spark_, rels):
-                sel_rows = [
-                    (os.path.abspath(
-                        os.path.join(self.table_dir, r)), p)
-                    for r in rels
-                    for p in sorted(fresh_sets[r])
-                ]
-                return F.broadcast(
-                    spark_.createDataFrame(sel_rows, ["_afp", "_pos"])
-                )
-
-            actions.extend(self._write_cdc_files(
-                spark, version,
-                self._cdc_capture_matched(
-                    spark, snap, phys, groups, select_pairs, "delete"
-                ),
-            ))
-        self.commit(version, actions)
-        return {
-            "version": version,
-            "files": n_dv,
-            "rows_deleted": new_rows,
-        }
-
-    @staticmethod
-    def _decoded_fp():
-        """Spark-side ``_fp`` (file URI) -> absolute-path column, the
-        executor twin of :func:`hadoop_sync_spark.io.decode_file_uri`."""
-        return F.url_decode(
-            F.regexp_replace(
-                F.regexp_replace(F.col("_fp"), "^file:(//)?", ""),
-                r"\+",
-                "%2B",
-            )
-        )
-
-    @staticmethod
-    def _partition_groups(snap: Snapshot, rels) -> dict[tuple, list]:
-        """Affected files grouped by partition tuple — the updated
-        copies must land one file per tuple so partitionValues stay
-        authoritative."""
-        groups: dict[tuple, list[str]] = {}
-        for rel in rels:
-            pv = snap.live[rel].get("partitionValues") or {}
-            groups.setdefault(tuple(sorted(pv.items())), []).append(rel)
-        return groups
+                actions.extend(self._write_cdc_files(
+                    spark, version,
+                    self._cdc_capture_matched(
+                        spark, snap, phys, fresh, "delete"
+                    ),
+                ))
+            self.commit(version, actions)
+            return {"version": version, "files": len(fresh.keys),
+                    "rows_deleted": n}
+        finally:
+            fresh.release()
 
     def _fresh_frame(self, spark, snap: Snapshot, frame: DataFrame):
         """Distributed matched ``(_fp, _pos)`` frame → the FRESH rows
         (``_fp``, ``_pos``, ``_afp``, ``_rel``): positions the
         snapshot's existing deletion vectors already delete are
         anti-joined away through the read path's
-        :meth:`_dv_delete_frame` (its three decode regimes included).
-        Shared by the executor tiers of update_where and the
-        CDC-enabled delete_where."""
-        rel_map = spark.createDataFrame(
-            [
-                (os.path.abspath(os.path.join(self.table_dir, rel)),
-                 rel)
-                for rel in snap.live
-            ],
-            ["_afp", "_rel"],
-        )
-        m = frame.withColumn("_afp", self._decoded_fp()).join(
-            F.broadcast(rel_map), "_afp"
+        :meth:`_dv_delete_frame` (its three decode regimes included)."""
+        m = rowlevel.attach(
+            spark, frame,
+            [(os.path.abspath(os.path.join(self.table_dir, rel)), rel)
+             for rel in snap.live],
+            ["_rel"],
         )
         dv_map = {
             rel: add["deletionVector"]
@@ -2428,32 +2263,27 @@ class DeltaLog:
             cfg.get("delta.enableChangeDataFeed", "")
         ).lower() == "true"
 
-    def _join_matched(self, spark, snap, phys, rels, sel):
-        """Scan ``rels`` (full physical data columns, row lineage) and
-        inner-join the matched ``(_afp, _pos)`` pairs — the shared
-        matched-row materialization the UPDATE rewrite and the CDC
-        captures build on.  Returns ``(joined_df, data_fields)`` with
-        LOGICAL column names."""
+    @staticmethod
+    def _data_names(snap: Snapshot) -> list[str]:
+        return [f.name for f in snap.schema().fields
+                if f.name not in snap.partition_columns]
+
+    def _lineage_scan(self, spark, snap: Snapshot, phys: dict, rels):
+        """Full data columns of ``rels`` under LOGICAL names, with row
+        lineage (:func:`rowlevel.lineage_scan`)."""
         schema = snap.schema()
-        part_cols = list(snap.partition_columns)
-        data_fields = [f for f in schema.fields
-                       if f.name not in part_cols]
-        full_schema = T.StructType([
-            T.StructField(phys[f.name], f.dataType, True)
-            for f in data_fields
-        ])
-        scan = spark.read.schema(full_schema).parquet(
-            *[os.path.join(self.table_dir, r) for r in rels]
-        ).select(
-            F.col("_metadata.file_path").alias("_fp"),
-            F.col("_metadata.row_index").alias("_pos"),
-            *[F.col(phys[f.name]).alias(f.name)
-              for f in data_fields],
+        names = self._data_names(snap)
+        return rowlevel.lineage_scan(
+            spark, [os.path.join(self.table_dir, r) for r in rels],
+            T.StructType([T.StructField(phys[n], schema[n].dataType, True)
+                          for n in names]),
+            {n: F.col(phys[n]) for n in names},
         )
-        joined = scan.withColumn("_afp", self._decoded_fp()).join(
-            sel, ["_afp", "_pos"], "inner"
+
+    def _groups(self, snap: Snapshot, rels) -> dict:
+        return rowlevel.group_by_partition(
+            rels, lambda rel: snap.live[rel].get("partitionValues")
         )
-        return joined, data_fields
 
     def _write_cdc_files(self, spark, version: int,
                          pieces: list) -> list[dict]:
@@ -2482,166 +2312,63 @@ class DeltaLog:
             }})
         return actions
 
-    def _cdc_capture_matched(
-        self, spark, snap, phys, groups, select_pairs, change_type
-    ) -> list:
-        """CDC pieces for matched EXISTING rows (delete preimages /
-        update preimages / merge preimages): per partition tuple, the
-        matched rows under physical names tagged ``change_type``."""
-        pieces = []
-        for pv_t in sorted(groups):
-            rels = groups[pv_t]
-            joined, data_fields = self._join_matched(
-                spark, snap, phys, rels, select_pairs(spark, rels)
-            )
-            pieces.append((dict(pv_t), joined.select(
-                *self._phys_cols(snap, phys,
-                                 [f.name for f in data_fields]),
+    def _cdc_capture_matched(self, spark, snap, phys, fresh,
+                             change_type) -> list:
+        """CDC pieces for the matched EXISTING rows (delete, update and
+        merge preimages): per partition tuple, the rows of ``fresh``
+        under physical names tagged ``change_type``."""
+        groups = self._groups(snap, fresh.keys)
+        names = self._data_names(snap)
+        return [
+            (dict(pv_t), rowlevel.matched_rows(
+                spark, fresh, groups[pv_t],
+                self._lineage_scan(spark, snap, phys, groups[pv_t]),
+            ).select(
+                *self._phys_cols(snap, phys, names),
                 F.lit(change_type).alias("_change_type"),
-            )))
-        return pieces
+            ))
+            for pv_t in sorted(groups)
+        ]
 
-    def _updated_copies(
-        self,
-        spark: SparkSession,
-        snap: Snapshot,
-        phys: dict,
-        set_values: dict,
-        version: int,
-        groups: dict,
-        select_pairs,
-    ) -> tuple[list[dict], list]:
-        """Shared UPDATE rewrite (both tiers): per affected partition
-        tuple, scan the affected files, inner-join the matched fresh
-        ``(_afp, _pos)`` pairs from ``select_pairs(spark, rels)`` (a
-        tiny broadcast list on the driver tier, a filtered distributed
-        frame on the executor tier), apply the SET expressions and
-        write ONE updated-copy file.  Returns ``(add_actions,
-        cdc_pieces)`` — the pieces (pre+postimage rows per tuple) are
-        non-empty only when the table enables the change data feed."""
-        from pyspark.sql import Column
-
+    def _updated_copies(self, spark, snap: Snapshot, phys: dict,
+                        set_values: dict, version: int, fresh):
+        """The UPDATE rewrite: per affected partition tuple, the
+        ``fresh`` rows with the SET expressions applied
+        (:func:`rowlevel.updated_groups`) land as ONE new data file.
+        Returns ``(add_actions, cdc_pieces)``; the pieces (pre- and
+        postimage rows per tuple) are empty unless the table enables
+        the change data feed."""
         from hadoop_sync_spark.io import write_single_parquet
 
-        schema = snap.schema()
         cdf = self._cdf_enabled(snap)
+        types = {f.name: f.dataType for f in snap.schema().fields}
         adds: list[dict] = []
         cdc_pieces: list = []
-        for gi, pv_t in enumerate(sorted(groups)):
-            rels = groups[pv_t]
-            upd, data_fields = self._join_matched(
-                spark, snap, phys, rels, select_pairs(spark, rels)
-            )
-            # ONE select: every SET expression evaluates against the
-            # ORIGINAL row (simultaneous-assignment UPDATE semantics —
-            # sequential withColumn would let `SET k=9, v=k+1` see 9)
-            exprs = {
-                c: (v if isinstance(v, Column) else F.lit(v))
-                .cast(schema[c].dataType)
-                for c, v in set_values.items()
-            }
-            out = upd.select(*self._phys_cols(
-                snap, phys, [f.name for f in data_fields], exprs=exprs
-            ))
+        for gi, pv_t, rows, exprs in rowlevel.updated_groups(
+            spark, fresh, self._groups(snap, fresh.keys),
+            lambda rels: self._lineage_scan(spark, snap, phys, rels),
+            set_values, types,
+        ):
             rel_new = f"part-update-{version:010d}-{gi}.parquet"
+            dest = os.path.join(self.table_dir, rel_new)
             write_single_parquet(
-                out, os.path.join(self.table_dir, rel_new),
-                "delta_update_",
+                rows.select(*self._phys_cols(snap, phys, list(exprs),
+                                             exprs=exprs)),
+                dest, "delta_update_",
             )
             adds.append(
-                self.add_action_for(
-                    rel_new, partitionValues=dict(pv_t)
-                )
+                self.add_action_for(rel_new, partitionValues=dict(pv_t))
             )
             if cdf:
-                pre = upd.select(
-                    *self._phys_cols(snap, phys,
-                                     [f.name for f in data_fields]),
+                pre = rows.select(
+                    *self._phys_cols(snap, phys, list(exprs)),
                     F.lit("update_preimage").alias("_change_type"),
                 )
-                post = spark.read.parquet(
-                    os.path.join(self.table_dir, rel_new)
-                ).select(
-                    "*",
-                    F.lit("update_postimage").alias("_change_type"),
+                post = spark.read.parquet(dest).select(
+                    "*", F.lit("update_postimage").alias("_change_type"),
                 )
-                cdc_pieces.append(
-                    (dict(pv_t), pre.unionByName(post))
-                )
+                cdc_pieces.append((dict(pv_t), pre.unionByName(post)))
         return adds, cdc_pieces
-
-    def _update_where_distributed(
-        self,
-        spark: SparkSession,
-        snap: Snapshot,
-        frame: DataFrame,
-        set_values: dict,
-        now_ms: int,
-        storage: str,
-        phys: dict,
-    ) -> dict:
-        """EXECUTOR tier of :meth:`update_where` (round 12): the
-        matched ``(_fp, _pos)`` frame stays distributed — existing-DV
-        subtraction is an anti-join against the read path's
-        :meth:`_dv_delete_frame` (its three decode regimes included),
-        the per-file bitmaps build and write executor-side, and the
-        updated copies join the distributed fresh frame.  The driver
-        touches one row per affected file."""
-        noop = {"version": None, "files": 0, "new_files": 0,
-                "rows_updated": 0}
-        version = self.latest_version() + 1
-        fresh_df = self._fresh_frame(spark, snap, frame).persist()
-        try:
-            rows = self._dv_build_distributed(
-                snap, fresh_df.select("_fp", "_pos"), version, storage,
-                "update_where",
-            )
-            if not rows:
-                return noop
-            n_updated = sum(r.fresh for r in rows)
-            groups = self._partition_groups(snap, [r.rel for r in rows])
-
-            def select_pairs(spark_, rels):
-                abs_paths = [
-                    os.path.abspath(os.path.join(self.table_dir, r))
-                    for r in rels
-                ]
-                return fresh_df.where(
-                    F.col("_afp").isin(abs_paths)
-                ).select("_afp", "_pos")
-
-            adds, cdc_pieces = self._updated_copies(
-                spark, snap, phys, set_values, version, groups,
-                select_pairs,
-            )
-            proto = _protocol_with_feature(
-                snap.protocol
-                or {"minReaderVersion": 1, "minWriterVersion": 2},
-                "deletionVectors",
-            )
-            if cdc_pieces:
-                proto = _protocol_with_writer_feature(
-                    proto, "changeDataFeed"
-                )
-            actions: list[dict] = [
-                {"commitInfo": {"timestamp": now_ms,
-                                "operation": "UPDATE"}},
-                {"protocol": proto},
-            ]
-            actions.extend(self._dv_actions_for(snap, rows, version))
-            actions.extend(adds)
-            actions.extend(
-                self._write_cdc_files(spark, version, cdc_pieces)
-            )
-            self.commit(version, actions)
-            return {
-                "version": version,
-                "files": len(rows),
-                "new_files": len(adds),
-                "rows_updated": n_updated,
-            }
-        finally:
-            fresh_df.unpersist()
 
     def update_where(
         self,
@@ -2649,33 +2376,26 @@ class DeltaLog:
         column_filter: dict,
         set_values: dict,
         now_ms: int = 0,
-        storage: str = "u",
     ) -> dict:
-        """Row-level ``UPDATE t SET ... WHERE ...`` the merge-on-read
-        way (round 11): the matched rows' positions union into each
-        affected file's deletion vector AND their updated copies append
-        as new data files — one file per affected partition tuple, all
-        in ONE commit, exactly production Delta's DV-backed UPDATE.
+        """Row-level ``UPDATE t SET ... WHERE ...``, merge-on-read: the
+        matched rows' positions union into each affected file's
+        deletion vector and their updated copies append as new data
+        files, one per affected partition tuple, all in ONE commit.
         ``column_filter`` is the ``{col: (lo, hi)}`` range form;
-        ``set_values`` maps column -> literal or pyspark Column
-        expression (evaluated against the matched rows' LOGICAL
-        columns, cast to the column's schema type).  Rows an existing
-        DV already deletes are excluded — updating them would resurrect
-        deleted data.  Partition columns refuse in both the predicate
+        ``set_values`` maps column -> literal or pyspark Column over
+        the matched rows' LOGICAL columns, cast to the column's type,
+        all evaluated against the original row.  Rows an existing DV
+        already deletes are left alone (updating them would resurrect
+        deleted data).  Partition columns refuse in both the predicate
         and the SET list (a partition move is a rewrite, not an
-        update); id-mode mapping resolves per-footer (round 13) and
-        the rewritten copies stamp footer field ids.
-        Matches above :data:`DELETE_WHERE_ROW_LIMIT` switch to the
-        EXECUTOR tier (round 12): positions stay distributed end to
-        end — DV bitmaps build executor-side and the updated copies
-        join against the distributed matched frame instead of a
-        driver-built broadcast list."""
+        update); id-mode tables get stamped footer field ids on the
+        copies.  Returns ``{version, files, new_files,
+        rows_updated}``."""
         if not set_values:
             raise ValueError("update_where needs at least one SET")
         snap = self.snapshot()
         schema = snap.schema()
-        # cheap guards BEFORE the scan (round-11 review: a typo'd SET
-        # column should not cost a full predicate scan first)
+        # cheap guards before the scan
         names = {f.name for f in schema.fields} if schema else set()
         for c in set_values:
             if c not in names:
@@ -2685,79 +2405,35 @@ class DeltaLog:
                     f"update_where SET on partition column {c!r}: a "
                     "partition move is a rewrite, not an update"
                 )
-        phys, per_file, frame = self._matched_per_file(
+        phys, matched = self._match(
             spark, snap, column_filter, "update_where"
         )
         noop = {"version": None, "files": 0, "new_files": 0,
                 "rows_updated": 0}
-        if per_file is None and frame is None:
+        if matched is None:
             return noop
-        if frame is not None:
-            return self._update_where_distributed(
-                spark, snap, frame, set_values, now_ms, storage, phys
-            )
-        fresh: dict[str, set[int]] = {}
-        existing: dict[str, set[int]] = {}
-        for rel, poss in per_file.items():
-            prev = snap.live[rel]
-            ex: set[int] = set()
-            if prev.get("deletionVector"):
-                ex = set(self._dv_positions(prev["deletionVector"]))
-            fr = poss - ex
-            if fr:
-                fresh[rel] = fr
-                existing[rel] = ex
-        if not fresh:
-            return noop
-        n_updated = sum(len(v) for v in fresh.values())
         version = self.latest_version() + 1
-        groups = self._partition_groups(snap, fresh)
-
-        def select_pairs(spark_, rels):
-            sel_rows = [
-                (os.path.abspath(os.path.join(self.table_dir, r)), p)
-                for r in rels
-                for p in sorted(fresh[r])
-            ]
-            return F.broadcast(
-                spark_.createDataFrame(sel_rows, ["_afp", "_pos"])
-            )
-
-        adds, cdc_pieces = self._updated_copies(
-            spark, snap, phys, set_values, version, groups, select_pairs
+        dv_actions, fresh, n = self._union_dvs(
+            spark, snap, matched, version, fresh_rows=True
         )
-        proto = _protocol_with_feature(
-            snap.protocol
-            or {"minReaderVersion": 1, "minWriterVersion": 2},
-            "deletionVectors",
-        )
-        if cdc_pieces:
-            proto = _protocol_with_writer_feature(
-                proto, "changeDataFeed"
+        try:
+            if not n:
+                return noop
+            adds, cdc_pieces = self._updated_copies(
+                spark, snap, phys, set_values, version, fresh
             )
-        actions: list[dict] = [
-            {"commitInfo": {"timestamp": now_ms, "operation": "UPDATE"}},
-            {"protocol": proto},
-        ]
-        for rel in sorted(fresh):
-            prev = dict(snap.live[rel])
-            desc = self._dv_descriptor(
-                rel, sorted(existing[rel] | fresh[rel]), version, storage
-            )
-            prev["deletionVector"] = desc
-            actions.append({"remove": {"path": rel, "dataChange": True}})
-            actions.append({"add": prev})
-        actions.extend(adds)
-        actions.extend(
-            self._write_cdc_files(spark, version, cdc_pieces)
-        )
-        self.commit(version, actions)
-        return {
-            "version": version,
-            "files": len(fresh),
-            "new_files": len(adds),
-            "rows_updated": n_updated,
-        }
+            self.commit(version, [
+                {"commitInfo": {"timestamp": now_ms,
+                                "operation": "UPDATE"}},
+                {"protocol": _dv_protocol(snap, bool(cdc_pieces))},
+                *dv_actions,
+                *adds,
+                *self._write_cdc_files(spark, version, cdc_pieces),
+            ])
+            return {"version": version, "files": len(fresh.keys),
+                    "new_files": len(adds), "rows_updated": n}
+        finally:
+            fresh.release()
 
     def merge_upsert(
         self,
@@ -2765,31 +2441,27 @@ class DeltaLog:
         source: DataFrame,
         key_col: str,
         now_ms: int = 0,
-        storage: str = "u",
     ) -> dict:
-        """MERGE/upsert (round 11; the Delta twin of
-        :meth:`IcebergTable.merge_upsert`): matched target rows DV out
-        of their files and the full source batch appends as one new
-        file, ONE commit.  Delta has no equality deletes, so the match
-        needs a target scan — but only of the KEY column (column-pruned,
-        with the distinct source keys pushed as an IN filter, so
-        row-group stats prune on the scan side), never the full rows.
-        Work is O(target-key-scan + source).  Either side outgrowing
-        :data:`DELETE_WHERE_ROW_LIMIT` switches to the EXECUTOR tier
-        (round 12): an over-cap key set semi-joins the scan instead of
-        materializing an IN list, and over-cap matches build their DV
-        bitmaps executor-side — the driver handles per-file descriptor
-        rows only.  ``source`` must carry exactly the table's logical
-        columns (INCLUDING partition columns — on a partitioned table
-        the source rows decide their own tuples); unmapped and
-        name-mode tables supported.  Partitioned tables (round 12)
-        split the source per partition tuple and land one upsert file
-        per tuple IN THE SAME single commit — the upsert key may not be
-        a partition column (its values never reach the data files, so
-        the key scan could not match), and partition column types are
-        limited to the string-round-trippable scalars
-        (long/int/string/boolean, the types the read path's
-        ``CAST(partitionValue AS type)`` inverts exactly)."""
+        """MERGE/upsert on ``key_col``: target rows whose key appears
+        in ``source`` leave through deletion vectors and the whole
+        source batch appends as new data, in ONE commit.  Delta has no
+        equality deletes, so the match scans the target's KEY column
+        only: an IN list pushed to the parquet scan for up to
+        :data:`MERGE_IN_PUSHDOWN_KEY_LIMIT` distinct keys, a semi-join
+        against the distinct keys above it.  ``source`` carries exactly
+        the table's logical columns, partition columns included: on a
+        partitioned table each source partition tuple lands as its own
+        file.  The key may not be a partition column (its values never
+        reach the data files), and partition columns must be
+        long/int/string/boolean, the types whose protocol string
+        encoding round-trips exactly.  NULL keys refuse.  The protocol
+        upgrade rides only a commit that writes a DV.  Returns
+        ``{version, files, rows_matched, rows_inserted}``; an empty
+        source commits nothing."""
+        import pyarrow.parquet as _pq
+
+        from hadoop_sync_spark.io import write_single_parquet
+
         snap = self.snapshot()
         schema = snap.schema()
         if schema is None:
@@ -2824,55 +2496,24 @@ class DeltaLog:
                 f"exactly (extra: {sorted(extra)}, "
                 f"missing: {sorted(missing)})"
             )
-        cap = self.DELETE_WHERE_ROW_LIMIT
-        keys_df = source.select(
-            F.col(key_col).cast(schema[key_col].dataType)
-        ).distinct()
-        keys = [r[0] for r in keys_df.limit(cap + 1).collect()]
-        if not keys:
+        keys_df, keys = rowlevel.merge_keys(
+            source, key_col, schema[key_col].dataType
+        )
+        if keys == []:
             return {"version": None, "files": 0, "rows_matched": 0,
                     "rows_inserted": 0}
-        over_cap_keys = len(keys) > cap
-        if over_cap_keys:
-            # EXECUTOR tier for the key set: never an IN list — the
-            # null check becomes an aggregate and the match a semi-join
-            if keys_df.where(
-                F.col(key_col).isNull()
-            ).limit(1).count():
-                raise ValueError(
-                    "merge_upsert source contains NULL keys — upsert "
-                    "keys must be non-null"
-                )
-        elif any(k is None for k in keys):
-            # `=` does not match NULL in SQL MERGE (and Iceberg's
-            # eqNullSafe WOULD) — a null-keyed upsert is ambiguous
-            # across the format twins, so both refuse (round-11 review)
-            raise ValueError(
-                "merge_upsert source contains NULL keys — upsert keys "
-                "must be non-null"
-            )
         version = self.latest_version() + 1
-        per_file: dict[str, set[int]] = {}
-        frame = None
-        # IN-list pushdown only for SMALL key sets (independent of the
-        # 1M position cap): Catalyst planning of a large literal IN
-        # list dominates the scan well before the cap — measured 4x at
-        # 10k keys (see MERGE_IN_PUSHDOWN_KEY_LIMIT)
-        use_in = (not over_cap_keys
-                  and len(keys) <= self.MERGE_IN_PUSHDOWN_KEY_LIMIT)
+        matched = None
         if snap.files:
-            _, per_file, frame = self._matched_per_file(
+            use_in = (keys is not None
+                      and len(keys) <= self.MERGE_IN_PUSHDOWN_KEY_LIMIT)
+            _, matched = self._match(
                 spark, snap, {}, "merge_upsert",
                 in_filter=((key_col, keys) if use_in else None),
                 in_frame=(None if use_in else (key_col, keys_df)),
             )
-            per_file = per_file or {}
-        # the new file(s): full source batch under physical names —
-        # one file per affected partition tuple on a partitioned table
-        # (tuples are metadata scale: they become one add action each
-        # in this same commit regardless), a single file otherwise
-        from hadoop_sync_spark.io import write_single_parquet
-
+        # the new file(s): the source batch under physical names, one
+        # file per source partition tuple on a partitioned table
         cast_src = source.select(*[
             F.col(n).cast(schema[n].dataType) for n in names
         ])
@@ -2885,192 +2526,84 @@ class DeltaLog:
                 return "true" if v else "false"
             return str(v)
 
+        if part_cols:
+            tuples, cond_for = rowlevel.split_tuples(cast_src, part_cols)
+            parts = [
+                (f"part-upsert-{version:010d}-{gi}.parquet",
+                 {phys.get(c, c): _pv_str(t[c]) for c in part_cols},
+                 cond_for(t))
+                for gi, t in enumerate(tuples)
+            ]
+        else:
+            parts = [(f"part-upsert-{version:010d}.parquet", {}, None)]
         new_adds: list[dict] = []
         rows_inserted = 0
-        import pyarrow.parquet as _pq
-
-        if part_cols:
-            tuples = cast_src.select(*part_cols).distinct().collect()
-            for gi, t in enumerate(sorted(
-                tuples, key=lambda r: tuple(
-                    (v is None, v) for v in r
-                )
-            )):
-                cond = None
-                for c in part_cols:
-                    term = F.col(c).eqNullSafe(F.lit(t[c]))
-                    cond = term if cond is None else cond & term
-                out = cast_src.where(cond).select(
-                    *self._phys_cols(snap, phys, data_names)
-                )
-                rel_new = f"part-upsert-{version:010d}-{gi}.parquet"
-                write_single_parquet(
-                    out, os.path.join(self.table_dir, rel_new),
-                    "delta_upsert_",
-                )
-                rows_inserted += _pq.read_metadata(
-                    os.path.join(self.table_dir, rel_new)
-                ).num_rows
-                new_adds.append(self.add_action_for(
-                    rel_new,
-                    partitionValues={
-                        phys.get(c, c): _pv_str(t[c])
-                        for c in part_cols
-                    },
-                ))
-        else:
-            out = cast_src.select(
-                *self._phys_cols(snap, phys, names)
-            )
-            rel_new = f"part-upsert-{version:010d}.parquet"
+        for rel_new, pv, cond in parts:
+            out = cast_src if cond is None else cast_src.where(cond)
+            dest = os.path.join(self.table_dir, rel_new)
             write_single_parquet(
-                out, os.path.join(self.table_dir, rel_new),
-                "delta_upsert_",
+                out.select(*self._phys_cols(snap, phys, data_names)),
+                dest, "delta_upsert_",
             )
-            rows_inserted = _pq.read_metadata(
-                os.path.join(self.table_dir, rel_new)
-            ).num_rows
-            new_adds.append(self.add_action_for(rel_new))
-        actions: list[dict] = [
-            {"commitInfo": {"timestamp": now_ms, "operation": "MERGE"}},
-        ]
+            rows_inserted += _pq.read_metadata(dest).num_rows
+            new_adds.append(
+                self.add_action_for(rel_new, partitionValues=pv)
+            )
         cdf = self._cdf_enabled(snap)
-        rows_matched = 0
-        n_dv_files = 0
-        fresh_sets: dict[str, set[int]] = {}
-        fresh_df = None
-        if frame is not None:
-            if cdf:
-                fresh_df = self._fresh_frame(
-                    spark, snap, frame
-                ).persist()
-                frame = fresh_df.select("_fp", "_pos")
-            # EXECUTOR tier for the matched positions (round 12)
-            dv_rows = self._dv_build_distributed(
-                snap, frame, version, storage, "merge_upsert"
-            )
-            rows_matched = sum(r.fresh for r in dv_rows)
-            n_dv_files = len(dv_rows)
-            actions.extend(
-                self._dv_actions_for(snap, dv_rows, version)
-            )
-            affected = [r.rel for r in dv_rows]
-        for rel in sorted(per_file):
-            prev = dict(snap.live[rel])
-            existing: set[int] = set()
-            if prev.get("deletionVector"):
-                existing = set(
-                    self._dv_positions(prev["deletionVector"])
+        dv_actions, fresh, rows_matched = (
+            self._union_dvs(spark, snap, matched, version,
+                            fresh_rows=cdf)
+            if matched is not None
+            else ([], rowlevel.Matched({}), 0)
+        )
+        try:
+            actions: list[dict] = [
+                {"commitInfo": {"timestamp": now_ms,
+                                "operation": "MERGE"}},
+            ]
+            if rows_matched:
+                # an all-new-keys batch stays readable by engines
+                # without the deletionVectors feature
+                actions.append({"protocol": _dv_protocol(snap, cdf)})
+            actions += dv_actions + new_adds
+            if cdf and rows_matched:
+                # a commit carrying cdc actions must capture ALL its
+                # changes, inserts included (an all-new-keys merge
+                # writes none: readers derive pure inserts from the
+                # adds).  Preimages are the matched old rows; source
+                # rows tag update_postimage when their key matched,
+                # insert otherwise.
+                pieces = self._cdc_capture_matched(
+                    spark, snap, phys, fresh, "update_preimage"
                 )
-            fresh = per_file[rel] - existing
-            if not fresh:
-                continue
-            fresh_sets[rel] = fresh
-            rows_matched += len(fresh)
-            n_dv_files += 1
-            prev["deletionVector"] = self._dv_descriptor(
-                rel, sorted(existing | per_file[rel]), version, storage
-            )
-            actions.append({"remove": {"path": rel, "dataChange": True}})
-            actions.append({"add": prev})
-        if rows_matched:
-            # the protocol upgrade rides ONLY a commit that actually
-            # writes a DV — an all-new-keys batch must stay readable by
-            # engines without the deletionVectors feature (r11 review)
-            proto = _protocol_with_feature(
-                snap.protocol
-                or {"minReaderVersion": 1, "minWriterVersion": 2},
-                "deletionVectors",
-            )
-            if cdf:
-                proto = _protocol_with_writer_feature(
-                    proto, "changeDataFeed"
-                )
-            actions.insert(1, {"protocol": proto})
-        actions.extend(new_adds)
-        if cdf and rows_matched:
-            # CDC capture (spec: a commit carrying cdc actions must
-            # capture ALL its changes, inserts included; an all-new-
-            # keys merge writes none — readers derive pure inserts
-            # from the add actions).  Preimages are the matched old
-            # rows; source rows tag update_postimage when their key
-            # matched, insert otherwise.
-            if fresh_df is not None:
-                def select_pairs(spark_, rels):
-                    abs_paths = [
-                        os.path.abspath(
-                            os.path.join(self.table_dir, r))
-                        for r in rels
-                    ]
-                    return fresh_df.where(
-                        F.col("_afp").isin(abs_paths)
-                    ).select("_afp", "_pos")
-            else:
-                affected = sorted(fresh_sets)
-
-                def select_pairs(spark_, rels):
-                    sel_rows = [
-                        (os.path.abspath(
-                            os.path.join(self.table_dir, r)), p)
-                        for r in rels
-                        for p in sorted(fresh_sets[r])
-                    ]
-                    return F.broadcast(spark_.createDataFrame(
-                        sel_rows, ["_afp", "_pos"]))
-
-            groups = self._partition_groups(snap, affected)
-            pieces = self._cdc_capture_matched(
-                spark, snap, phys, groups, select_pairs,
-                "update_preimage",
-            )
-            # matched-key set for source-row classification (the
-            # preimage rows' key values, one more pruned scan)
-            pre_all, _ = self._join_matched(
-                spark, snap, phys, affected,
-                select_pairs(spark, affected),
-            )
-            pre_keys = pre_all.select(
-                F.col(key_col).alias("_mk")
-            ).distinct()
-            tagged = cast_src.join(
-                pre_keys, cast_src[key_col] == pre_keys["_mk"], "left"
-            ).withColumn(
-                "_change_type",
-                F.when(F.col("_mk").isNotNull(),
-                       F.lit("update_postimage"))
-                .otherwise(F.lit("insert")),
-            ).drop("_mk")
-            if part_cols:
-                for t in sorted(
-                    tuples,
-                    key=lambda r: tuple((v is None, v) for v in r),
-                ):
-                    cond = None
-                    for c in part_cols:
-                        term = F.col(c).eqNullSafe(F.lit(t[c]))
-                        cond = term if cond is None else cond & term
-                    pieces.append((
-                        {phys.get(c, c): _pv_str(t[c])
-                         for c in part_cols},
-                        tagged.where(cond).select(
-                            *self._phys_cols(snap, phys, data_names),
-                            "_change_type",
-                        ),
-                    ))
-            else:
-                pieces.append(({}, tagged.select(
-                    *self._phys_cols(snap, phys, names),
+                pre_keys = rowlevel.matched_rows(
+                    spark, fresh, fresh.keys,
+                    self._lineage_scan(spark, snap, phys, fresh.keys),
+                ).select(F.col(key_col).alias("_mk")).distinct()
+                tagged = cast_src.join(
+                    pre_keys, cast_src[key_col] == pre_keys["_mk"],
+                    "left",
+                ).withColumn(
                     "_change_type",
-                )))
-            actions.extend(
-                self._write_cdc_files(spark, version, pieces)
-            )
-        if fresh_df is not None:
-            fresh_df.unpersist()
-        self.commit(version, actions)
+                    F.when(F.col("_mk").isNotNull(),
+                           F.lit("update_postimage"))
+                    .otherwise(F.lit("insert")),
+                ).drop("_mk")
+                for _, pv, cond in parts:
+                    out = tagged if cond is None else tagged.where(cond)
+                    pieces.append((pv, out.select(
+                        *self._phys_cols(snap, phys, data_names),
+                        "_change_type",
+                    )))
+                actions.extend(
+                    self._write_cdc_files(spark, version, pieces)
+                )
+            self.commit(version, actions)
+        finally:
+            fresh.release()
         return {
             "version": version,
-            "files": n_dv_files,
+            "files": len(fresh.keys),
             "rows_matched": rows_matched,
             "rows_inserted": rows_inserted,
         }

@@ -62,6 +62,7 @@ import json
 import os
 from dataclasses import dataclass, field as dataclasses_field
 
+from hadoop_sync_spark import rowlevel
 from hadoop_sync_spark.avro_codec import read_ocf, write_ocf
 from hadoop_sync_spark.io import (
     BROADCAST_DELETE_ROW_LIMIT as _BROADCAST_DELETE_ROW_LIMIT,
@@ -620,6 +621,65 @@ def transform_column(transform: str, src: str, src_type: str):
 #: the loud-failure guard)
 def _norm_path(p: str) -> str:
     return os.path.abspath(p)
+
+
+def _variant_col(variants: dict | None, fid: int, name: str):
+    """A logical column across its rename variants (the read path's
+    rule: a conforming file carries exactly one historical name)."""
+    from pyspark.sql import functions as F
+
+    return F.coalesce(
+        *[F.col(n) for n in (variants or {}).get(fid, [name])]
+    )
+
+
+def _added_entry(content: int, rel: str, partition: dict,
+                 record_count: int, size: int, equality_ids=None,
+                 lower: dict | None = None,
+                 upper: dict | None = None) -> dict:
+    """An ADDED manifest entry.  Sequence numbers stay null, so the
+    entry inherits its commit's sequence (spec v2 inheritance)."""
+
+    def bounds(b):
+        return [{"key": k, "value": v}
+                for k, v in sorted((b or {}).items())] or None
+
+    return {
+        "status": _STATUS_ADDED,
+        "snapshot_id": None,
+        "sequence_number": None,
+        "file_sequence_number": None,
+        "data_file": {
+            "content": content,
+            "file_path": rel,
+            "file_format": "PARQUET",
+            "partition": partition,
+            "record_count": record_count,
+            "file_size_in_bytes": size,
+            "equality_ids": equality_ids,
+            "lower_bounds": bounds(lower),
+            "upper_bounds": bounds(upper),
+        },
+    }
+
+
+def _file_entry(f: "DataFile") -> dict:
+    return _added_entry(_CONTENT_DATA, f.path, f.partition,
+                        f.record_count, f.file_size,
+                        lower=f.lower_bounds, upper=f.upper_bounds)
+
+
+def _written_entry(dest: str, rel: str, partition: dict,
+                   fields: list) -> dict:
+    """ADDED data entry for the parquet just written to ``dest``: the
+    record count from its footer, ``fields``' bounds from its row-group
+    statistics."""
+    import pyarrow.parquet as pq
+
+    lb, ub = parquet_column_bounds(dest, fields)
+    return _added_entry(_CONTENT_DATA, rel, partition,
+                        pq.read_metadata(dest).num_rows,
+                        os.path.getsize(dest), lower=lb, upper=ub)
 
 
 @dataclass(frozen=True)
@@ -2033,32 +2093,7 @@ class IcebergTable:
                     "default partition spec"
                 )
         prior = self._live_entries()
-        entries = prior + [
-            {
-                "status": _STATUS_ADDED,
-                "snapshot_id": None,
-                "sequence_number": None,
-                "file_sequence_number": None,
-                "data_file": {
-                    "content": _CONTENT_DATA,
-                    "file_path": f.path,
-                    "file_format": "PARQUET",
-                    "partition": f.partition,
-                    "record_count": f.record_count,
-                    "file_size_in_bytes": f.file_size,
-                    "equality_ids": None,
-                    "lower_bounds": [
-                        {"key": k, "value": v}
-                        for k, v in sorted(f.lower_bounds.items())
-                    ] or None,
-                    "upper_bounds": [
-                        {"key": k, "value": v}
-                        for k, v in sorted(f.upper_bounds.items())
-                    ] or None,
-                },
-            }
-            for f in files
-        ]
+        entries = prior + [_file_entry(f) for f in files]
         return self._commit_snapshot(
             entries,
             "append",
@@ -2190,28 +2225,6 @@ class IcebergTable:
 
         return id_srcs, field_of, derived, pv_encode
 
-    @staticmethod
-    def _split_tuples(frame, key_cols: list):
-        """Distinct partition tuples of ``frame`` over ``key_cols``,
-        deterministically ordered (None-first), plus a per-tuple
-        null-safe filter builder — the shared splitting idiom of the
-        partitioned write faces."""
-        from pyspark.sql import functions as F
-
-        tuples = sorted(
-            frame.select(*key_cols).distinct().collect(),
-            key=lambda r: tuple((v is None, v) for v in r),
-        )
-
-        def cond_for(t):
-            cond = None
-            for c in key_cols:
-                term = F.col(c).eqNullSafe(F.lit(t[c]))
-                cond = term if cond is None else cond & term
-            return cond
-
-        return tuples, cond_for
-
     def append_stream_batch(
         self,
         batch_df,
@@ -2230,7 +2243,7 @@ class IcebergTable:
         MERGE (one data file per tuple, manifest tuple stamped so
         partition filters prune streamed files) — identity fields
         stamp source values with the source column excluded from the
-        data files, and bucket/truncate/temporal fields (round 13)
+        data files, and bucket/truncate/temporal fields
         derive their transform value per source row via
         :func:`transform_column` with the source column kept in the
         data; an EMPTY batch still commits so the epoch watermark
@@ -2247,8 +2260,6 @@ class IcebergTable:
         manifest + metadata version."""
         import hashlib as _hashlib
         import shutil as _shutil
-
-        import pyarrow.parquet as _pq
 
         last = self.committed_epoch(query_id)
         if last is not None and epoch_id <= last:
@@ -2272,39 +2283,13 @@ class IcebergTable:
         bounds_fields = [f for f in schema_fields
                          if f["name"] not in part_cols]
 
-        def _entry(rel, dest, pv):
-            lb, ub = parquet_column_bounds(dest, bounds_fields)
-            return {
-                "status": _STATUS_ADDED,
-                "snapshot_id": None,
-                "sequence_number": None,
-                "file_sequence_number": None,
-                "data_file": {
-                    "content": _CONTENT_DATA,
-                    "file_path": rel,
-                    "file_format": "PARQUET",
-                    "partition": pv,
-                    "record_count": _pq.read_metadata(dest).num_rows,
-                    "file_size_in_bytes": os.path.getsize(dest),
-                    "equality_ids": None,
-                    "lower_bounds": [
-                        {"key": k, "value": v}
-                        for k, v in sorted(lb.items())
-                    ] or None,
-                    "upper_bounds": [
-                        {"key": k, "value": v}
-                        for k, v in sorted(ub.items())
-                    ] or None,
-                },
-            }
-
         entries = []
         if part_cols or derived:
             # partitioned: per-tuple split, the partitioned-merge
             # shape — one data file per tuple, manifest tuple stamped
             # so partition filters prune streamed files too.
-            # Transform fields (round 13) derive once per row into
-            # helper columns; identity fields split on the source.
+            # Transform fields derive once per row into helper
+            # columns; identity fields split on the source.
             from hadoop_sync_spark.io import write_single_parquet
 
             work = batch_df
@@ -2312,7 +2297,7 @@ class IcebergTable:
                 work = work.withColumn(h, expr)
             key_cols = [*part_cols, *[h for h, _, _ in derived]]
             data_names = [c for c in want if c not in part_cols]
-            tuples, cond_for = self._split_tuples(work, key_cols)
+            tuples, cond_for = rowlevel.split_tuples(work, key_cols)
             for gi, t in enumerate(tuples):
                 rel = (f"data/txn-{tag}-{epoch_id:010d}"
                        f"-p{gi:05d}.parquet")
@@ -2324,7 +2309,9 @@ class IcebergTable:
                 pv = {field_of[c]: pv_encode(c, t[c])
                       for c in part_cols}
                 pv.update({fn: t[h] for h, fn, _ in derived})
-                entries.append(_entry(rel, dest, pv))
+                entries.append(
+                    _written_entry(dest, rel, pv, bounds_fields)
+                )
         else:
             staging = os.path.join(
                 self.dir, f"_txn_staging-{tag}-{epoch_id}"
@@ -2340,7 +2327,9 @@ class IcebergTable:
                 rel = f"data/txn-{tag}-{epoch_id:010d}-{i:05d}.parquet"
                 dest = os.path.join(self.dir, rel)
                 os.replace(os.path.join(staging, name), dest)
-                entries.append(_entry(rel, dest, {}))
+                entries.append(
+                    _written_entry(dest, rel, {}, bounds_fields)
+                )
             _shutil.rmtree(staging, ignore_errors=True)
         return self._commit_snapshot(
             self._live_entries() + entries,
@@ -2377,6 +2366,31 @@ class IcebergTable:
             delete_entries=self._live_delete_entries(),
         )
 
+    def _null_partition(self, meta: dict) -> dict:
+        """The all-null partition tuple of table-wide delete files."""
+        return {f["name"]: None for f in self._spec_fields(meta, 0)}
+
+    def _pos_delete_entry(self, pairs: list, meta: dict, seq: int) -> dict:
+        """Write sorted ``(raw data-file path, pos)`` pairs as one
+        position-delete parquet (the spec's "Position Delete Files"
+        schema) and return its manifest entry, uncommitted."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        rel = f"data/delete-pos-{seq}.parquet"
+        path = os.path.join(self.dir, rel)
+        pq.write_table(
+            pa.table({
+                "file_path": pa.array([p for p, _ in pairs], pa.string()),
+                "pos": pa.array([p for _, p in pairs], pa.int64()),
+            }),
+            path,
+        )
+        return _added_entry(
+            _CONTENT_POS_DELETES, rel, self._null_partition(meta),
+            len(pairs), os.path.getsize(path),
+        )
+
     def add_position_deletes(
         self, deletes: list[tuple[str, int]], now_ms: int = 0
     ) -> int:
@@ -2387,44 +2401,12 @@ class IcebergTable:
         table-relative data file paths and 0-based row ordinals within
         each file.  Applies at read time to data files with data
         sequence ≤ this commit's sequence."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
         if not deletes:
             raise ValueError("no delete positions given")
         meta = self.metadata()
-        seq = meta["last-sequence-number"] + 1
-        rel = f"data/delete-pos-{seq}.parquet"
-        path = os.path.join(self.dir, rel)
-        ordered = sorted(deletes)
-        pq.write_table(
-            pa.table(
-                {
-                    "file_path": pa.array(
-                        [p for p, _ in ordered], pa.string()
-                    ),
-                    "pos": pa.array([p for _, p in ordered], pa.int64()),
-                }
-            ),
-            path,
+        entry = self._pos_delete_entry(
+            sorted(deletes), meta, meta["last-sequence-number"] + 1
         )
-        spec_fields = self._spec_fields(meta, 0)
-        entry = {
-            "status": _STATUS_ADDED,
-            "snapshot_id": None,
-            "sequence_number": None,  # inherits this commit's sequence
-            "file_sequence_number": None,
-            "data_file": {
-                "content": _CONTENT_POS_DELETES,
-                "file_path": rel,
-                "file_format": "PARQUET",
-                # not partition-scoped: all-null partition tuple
-                "partition": {f["name"]: None for f in spec_fields},
-                "record_count": len(ordered),
-                "file_size_in_bytes": os.path.getsize(path),
-                "equality_ids": None,
-            },
-        }
         return self._commit_snapshot(
             self._live_entries(),
             "delete",
@@ -2432,58 +2414,28 @@ class IcebergTable:
             delete_entries=self._live_delete_entries() + [entry],
         )
 
-    #: driver-tier materialization bound for the DML write faces'
-    #: matched (file, position) pairs and merge key sets — the
-    #: write-side analogue of the read path's delete-broadcast
-    #: ceiling.  At or under it, matches collect driver-side
-    #: (cheapest at fixture scale).  ABOVE it (round 12) every DML
-    #: face — delete_rows, update_rows and merge_upsert — switches to
-    #: the EXECUTOR tier: position/equality delete parquets write
-    #: straight from the distributed frames and update's rewrite joins
-    #: the fresh frame, so no predicate selectivity materializes
-    #: positions on the driver.
-    DELETE_ROWS_LIMIT = 1_000_000
-
-    def _matched_per_raw(self, spark, column_filter: dict, face: str):
-        """Shared DML matcher (round-11 review: delete_rows and
-        update_rows duplicated this): bounds-prune candidate files,
-        scan ONLY the predicate columns with per-file row lineage, and
-        return ``(cand, part_cols, per_raw, frame)``:
-
-        - ``per_raw = {raw_path: {positions}}`` (``frame`` None) when
-          the matched set fits :data:`DELETE_ROWS_LIMIT` — the driver
-          tier;
-        - ``per_raw`` None with ``frame`` the distributed
-          ``(_fp, _pos)`` DataFrame when it does NOT — the EXECUTOR
-          tier (round 12), the caller writes position-delete files
-          straight from the frame;
-        - both None when nothing matches.
-
-        Guards: empty / unknown / partition predicate columns; the cap
-        check runs THROUGH a ``limit(cap+1)`` so the driver never
-        materializes an oversized match list.  Renamed histories are
-        SUPPORTED (round 12, lifting the r11 refusal): the predicate
-        scan pins one physical column per historical name of each
-        predicate field and coalesces across the variants — exactly
-        the read path's name-variant resolution, so pre-rename files
-        match instead of silently null-filling."""
-        from pyspark.sql import functions as F
+    def _match(self, spark, column_filter: dict, face: str):
+        """The faces' predicate scan (:func:`rowlevel.predicate_scan`)
+        over the candidate files the manifest bounds keep, tiered by
+        :func:`rowlevel.match`.  Returns ``(cand, part_cols, matched)``;
+        ``matched`` is None when nothing matches.  Renamed histories
+        resolve like the read path: the scan pins one physical column
+        per historical name of each predicate field and coalesces
+        across them, so pre-rename files match too.  Refuses empty,
+        unknown and partition predicate columns."""
         from pyspark.sql import types as T
-
-        from hadoop_sync_spark.io import decode_file_uri
 
         if not column_filter:
             raise ValueError(f"{face} needs a predicate")
         variants = self._rename_history()
         meta = self.metadata()
         sid = meta.get("current-schema-id", 0)
-        sch_fields = self._schema_by_id(sid)["fields"]
-        names = {f["name"] for f in sch_fields}
-        fid_of = {f["name"]: f["id"] for f in sch_fields}
+        fid_of = {f["name"]: f["id"]
+                  for f in self._schema_by_id(sid)["fields"]}
         cand = self.files(column_filter=column_filter)
         part_cols = sorted({k for f in cand for k in f.partition})
         for c in column_filter:
-            if c not in names:
+            if c not in fid_of:
                 raise ValueError(f"no such column {c!r}")
             if c in part_cols:
                 raise NotImplementedError(
@@ -2491,73 +2443,73 @@ class IcebergTable:
                     "values never reach the data files"
                 )
         if not cand:
-            return cand, part_cols, None, None
+            return cand, part_cols, None
         full = self._spark_schema(
             sid, exclude=set(part_cols), name_variants=variants
         )
-
-        def _var_names(c):
-            return (variants.get(fid_of[c], [c]) if variants
-                    else [c])
-
-        pred_names = {n for c in column_filter for n in _var_names(c)}
-        pred_schema = T.StructType(
-            [f for f in full.fields if f.name in pred_names]
+        pred_names = {n for c in column_filter
+                      for n in (variants or {}).get(fid_of[c], [c])}
+        pairs = rowlevel.predicate_scan(
+            spark, [f.path for f in cand],
+            T.StructType([f for f in full.fields if f.name in pred_names]),
+            {c: _variant_col(variants, fid_of[c], c)
+             for c in column_filter},
+            column_filter,
         )
-        scan = spark.read.schema(pred_schema).parquet(
-            *[f.path for f in cand]
-        ).select(
-            F.col("_metadata.file_path").alias("_fp"),
-            F.col("_metadata.row_index").alias("_pos"),
-            *[F.coalesce(*[F.col(n) for n in _var_names(c)]).alias(c)
-              for c in column_filter],
+        return cand, part_cols, rowlevel.match(
+            pairs, {f.raw_path: _norm_path(f.path) for f in cand}
         )
-        for c, (lo, hi) in column_filter.items():
-            if lo is not None:
-                scan = scan.filter(F.col(c) >= lo)
-            if hi is not None:
-                scan = scan.filter(F.col(c) <= hi)
-        cap = self.DELETE_ROWS_LIMIT
-        pairs = scan.select("_fp", "_pos")
-        matched = pairs.limit(cap + 1).collect()
-        if not matched:
-            return cand, part_cols, None, None
-        if len(matched) > cap:
-            # EXECUTOR tier (round 12): hand back the distributed frame
-            # — the caller writes the position-delete parquet straight
-            # from it instead of refusing (the round-11 behavior)
-            return cand, part_cols, None, pairs
-        raw_of = {_norm_path(f.path): f.raw_path for f in cand}
-        per_raw: dict[str, set[int]] = {}
-        for r in matched:
-            raw = raw_of.get(_norm_path(decode_file_uri(r._fp)))
-            if raw is None:
-                raise ValueError(
-                    f"scanned file missing from the snapshot map "
-                    f"(URI normalization mismatch): {r._fp}"
+
+    def _executor_frame(self, spark, cand, frame, pos_dels=()):
+        """Executor-tier matched frame with each row's manifest path
+        ``_raw`` and data sequence ``_fseq`` attached, minus the rows
+        ``pos_dels`` already hide (sequence-aware: a delete applies to
+        a data file only when data sequence ≤ delete sequence).
+        Persisted; raises on rows no candidate file claims."""
+        from pyspark.sql import functions as F
+
+        m = rowlevel.attach(
+            spark, frame,
+            [(_norm_path(f.path), f.raw_path, f.sequence) for f in cand],
+            ["_raw", "_fseq"], how="left",
+        )
+        if pos_dels:
+            dels = None
+            for d in pos_dels:
+                dfd = spark.read.parquet(d.path).select(
+                    F.col("file_path").alias("_d_file"),
+                    F.col("pos").cast("long").alias("_d_pos"),
+                    F.lit(d.sequence).alias("_dseq"),
                 )
-            per_raw.setdefault(raw, set()).add(r._pos)
-        return cand, part_cols, per_raw, None
+                dels = dfd if dels is None else dels.unionByName(dfd)
+            m = m.join(
+                dels,
+                (m["_raw"] == dels["_d_file"])
+                & (m["_pos"] == dels["_d_pos"])
+                & (F.col("_fseq") <= dels["_dseq"]),
+                "left_anti",
+            )
+        m = m.persist()
+        try:
+            rowlevel.check_attached(m, "_raw", "DML write")
+        except ValueError:
+            m.unpersist()
+            raise
+        return m
 
     #: target rows per position-delete parquet on the executor tier —
     #: bounds individual delete-file size (and the read side's per-file
     #: decode) without any driver materialization
     POS_DELETE_FILE_ROWS = 2_000_000
 
-    def _add_position_deletes_distributed(
-        self, spark, cand, frame, now_ms: int
-    ) -> int:
-        """EXECUTOR tier of :meth:`delete_rows` (round 12 — the scale
-        path the round-11 cap refusal named): the matched ``(_fp,
-        _pos)`` frame maps back to manifest ``file_path`` strings via a
-        broadcast of the candidate-file list (metadata scale), range-
-        partitions on (file_path, pos) and writes the position-delete
-        parquet(s) DIRECTLY from the executors — globally sorted per
-        the spec's delete-file sort order, ~\
-        :data:`POS_DELETE_FILE_ROWS` rows each, committed as one
-        snapshot with one delete-manifest entry per file.  The driver
-        materializes nothing but file metadata; a purge matching 100M
-        rows is a distributed sort-write, not a refusal."""
+    def _pos_delete_entries(self, matched, n: int, meta: dict,
+                            seq: int) -> list[dict]:
+        """Write the position deletes of ``matched`` and return their
+        manifest entries, uncommitted.  The driver tier writes one
+        sorted file from the position sets; the executor tier writes
+        globally sorted parquet(s) of about :data:`POS_DELETE_FILE_ROWS`
+        rows each straight from the frame (which carries ``_raw``), so
+        the driver sees only footers."""
         import glob as _glob
         import math as _math
         import shutil as _shutil
@@ -2566,39 +2518,68 @@ class IcebergTable:
         import pyarrow.parquet as pq
         from pyspark.sql import functions as F
 
-        meta = self.metadata()
-        seq = meta["last-sequence-number"] + 1
-        raw_map = spark.createDataFrame(
-            [(_norm_path(f.path), f.raw_path) for f in cand],
-            ["_np", "file_path"],
-        )
-        decoded = F.url_decode(
-            F.regexp_replace(
-                F.regexp_replace(F.col("_fp"), "^file:(//)?", ""),
-                r"\+",
-                "%2B",
-            )
-        )
-        out = (
-            frame.withColumn("_np", decoded)
-            .join(F.broadcast(raw_map), "_np", "left")
-            .select(
-                "file_path", F.col("_pos").cast("long").alias("pos")
-            )
-            .persist()
-        )
+        if matched.per_file is not None:
+            return [self._pos_delete_entry(
+                sorted((raw, p) for raw, poss in matched.per_file.items()
+                       for p in poss),
+                meta, seq,
+            )]
+        nparts = max(1, _math.ceil(n / self.POS_DELETE_FILE_ROWS))
+        staging = _tempfile.mkdtemp(prefix="iceberg_posdel_")
+        entries: list[dict] = []
         try:
-            # an inner join would silently DROP unmapped rows — the
-            # driver tier raises on a normalization mismatch, so must we
-            if out.where(F.col("file_path").isNull()).first():
-                raise ValueError(
-                    "scanned file missing from the snapshot map "
-                    "(URI normalization mismatch) in the executor-tier "
-                    "position-delete write"
+            (
+                matched.frame.select(
+                    F.col("_raw").alias("file_path"),
+                    F.col("_pos").cast("long").alias("pos"),
                 )
-            n = out.count()
-            entries = self._pos_delete_entries_from_frame(
-                out, n, meta, seq
+                .repartitionByRange(nparts, "file_path", "pos")
+                .sortWithinPartitions("file_path", "pos")
+                .write.mode("overwrite")
+                .parquet(staging)
+            )
+            parts = sorted(
+                _glob.glob(os.path.join(staging, "part-*.parquet"))
+            )
+            for i, pf in enumerate(parts):
+                rows = pq.read_metadata(pf).num_rows
+                if rows == 0:
+                    continue
+                rel = f"data/delete-pos-{seq}-{i}.parquet"
+                dest = os.path.join(self.dir, rel)
+                os.replace(pf, dest)
+                entries.append(_added_entry(
+                    _CONTENT_POS_DELETES, rel, self._null_partition(meta),
+                    rows, os.path.getsize(dest),
+                ))
+        finally:
+            _shutil.rmtree(staging, ignore_errors=True)
+        return entries
+
+    def delete_rows(self, spark, column_filter: dict,
+                    now_ms: int = 0) -> int:
+        """Row-level ``DELETE FROM t WHERE ...``, merge-on-read:
+        candidate files are pruned by the manifest column bounds, only
+        the predicate columns are scanned, and ONE snapshot commits the
+        position deletes covering every match (they apply to data files
+        with sequence ≤ the commit's).  ``column_filter`` is the
+        ``{col: (lo, hi)}`` range form.  Positions existing position
+        deletes already cover de-duplicate harmlessly on read, as do
+        rows an equality delete already hides.  Renamed schema
+        histories are supported.  Returns the number of (file,
+        position) pairs committed; a predicate matching nothing commits
+        nothing and returns 0."""
+        cand, _, matched = self._match(spark, column_filter, "delete_rows")
+        if matched is None:
+            return 0
+        if matched.per_file is None:
+            matched.frame = self._executor_frame(spark, cand, matched.frame)
+        try:
+            n = (sum(len(v) for v in matched.per_file.values())
+                 if matched.per_file is not None else matched.frame.count())
+            meta = self.metadata()
+            entries = self._pos_delete_entries(
+                matched, n, meta, meta["last-sequence-number"] + 1
             )
             self._commit_snapshot(
                 self._live_entries(),
@@ -2608,108 +2589,7 @@ class IcebergTable:
             )
             return n
         finally:
-            out.unpersist()
-
-    def _pos_delete_entries_from_frame(
-        self, pairs, n: int, meta: dict, seq: int
-    ) -> list[dict]:
-        """Write globally-sorted position-delete parquet(s) straight
-        from a distributed ``(file_path, pos)`` frame (~\
-        :data:`POS_DELETE_FILE_ROWS` rows each) and return their
-        manifest entries WITHOUT committing — shared by
-        :meth:`_add_position_deletes_distributed` (its own snapshot)
-        and the executor tier of :meth:`update_rows` (one snapshot
-        carrying delete + rewritten copies)."""
-        import glob as _glob
-        import math as _math
-        import shutil as _shutil
-        import tempfile as _tempfile
-
-        import pyarrow.parquet as pq
-
-        nparts = max(1, _math.ceil(n / self.POS_DELETE_FILE_ROWS))
-        staging = _tempfile.mkdtemp(prefix="iceberg_posdel_")
-        entries: list[dict] = []
-        try:
-            (
-                pairs.repartitionByRange(nparts, "file_path", "pos")
-                .sortWithinPartitions("file_path", "pos")
-                .write.mode("overwrite")
-                .parquet(staging)
-            )
-            spec_fields = self._spec_fields(meta, 0)
-            for i, pf in enumerate(
-                sorted(
-                    _glob.glob(
-                        os.path.join(staging, "part-*.parquet")
-                    )
-                )
-            ):
-                rows = pq.read_metadata(pf).num_rows
-                if rows == 0:
-                    continue
-                rel = f"data/delete-pos-{seq}-{i}.parquet"
-                os.replace(pf, os.path.join(self.dir, rel))
-                entries.append({
-                    "status": _STATUS_ADDED,
-                    "snapshot_id": None,
-                    "sequence_number": None,
-                    "file_sequence_number": None,
-                    "data_file": {
-                        "content": _CONTENT_POS_DELETES,
-                        "file_path": rel,
-                        "file_format": "PARQUET",
-                        "partition": {
-                            f["name"]: None for f in spec_fields
-                        },
-                        "record_count": rows,
-                        "file_size_in_bytes": os.path.getsize(
-                            os.path.join(self.dir, rel)
-                        ),
-                        "equality_ids": None,
-                    },
-                })
-        finally:
-            _shutil.rmtree(staging, ignore_errors=True)
-        return entries
-
-    def delete_rows(self, spark, column_filter: dict,
-                    now_ms: int = 0) -> int:
-        """Row-level ``DELETE FROM t WHERE ...`` the merge-on-read way
-        (round 11; the Iceberg twin of :meth:`DeltaLog.delete_where`):
-        prune candidate files by the manifest column bounds (the same
-        two-layer metadata pruning ``read`` uses — at 100 TB a selective
-        predicate scans a handful of files, not the table), scan ONLY
-        the predicate columns with per-file row lineage, and commit ONE
-        position-delete file covering every match
-        (:meth:`add_position_deletes` — inherited sequence, applies to
-        data files with sequence ≤ the commit's).  Positions already
-        covered by existing position deletes de-duplicate harmlessly in
-        the read-side anti-join; rows an equality delete already hides
-        gain a redundant position entry, also harmless.  Returns the
-        number of (file, position) pairs committed; a no-match
-        predicate commits nothing and returns 0.  Renamed schema
-        histories are supported (round 12): the predicate scan
-        resolves by name variant like the read path, so pre-rename
-        files match too.  Matches above :data:`DELETE_ROWS_LIMIT`
-        switch to the EXECUTOR tier (round 12): the position-delete
-        parquets write straight from the distributed matched frame
-        (:meth:`_add_position_deletes_distributed`) — no driver
-        materialization at any match size."""
-        cand, _, per_raw, frame = self._matched_per_raw(
-            spark, column_filter, "delete_rows"
-        )
-        if per_raw is None and frame is None:
-            return 0
-        if frame is not None:
-            return self._add_position_deletes_distributed(
-                spark, cand, frame, now_ms
-            )
-        pairs = sorted(
-            (raw, p) for raw, poss in per_raw.items() for p in poss
-        )
-        self.add_position_deletes(pairs, now_ms=now_ms)
-        return len(pairs)
+            matched.release()
 
     def update_rows(
         self,
@@ -2718,33 +2598,23 @@ class IcebergTable:
         set_values: dict,
         now_ms: int = 0,
     ) -> int:
-        """Row-level ``UPDATE t SET ... WHERE ...`` the merge-on-read
-        way (round 11; the Iceberg twin of
-        :meth:`DeltaLog.update_where`): ONE snapshot commits a
-        position-delete file covering the matched rows AND their
-        updated copies as new data files (one per affected partition
-        tuple, footer bounds stamped so later predicates keep
-        pruning).  The new files share the commit's sequence number;
-        the position delete names only the OLD paths, so the spec's
+        """Row-level ``UPDATE t SET ... WHERE ...``, merge-on-read: ONE
+        snapshot commits position deletes covering the matched rows AND
+        their updated copies as new data files (one per affected
+        partition tuple, footer bounds stamped so later predicates keep
+        pruning).  The copies share the commit's sequence number while
+        the position deletes name only the old paths, so the spec's
         sequence rule leaves the copies visible.  ``set_values`` maps
-        column -> literal or pyspark Column over the logical row.
-        Rows existing position deletes already hide are excluded
-        (updating them would resurrect deleted data); tables with live
-        EQUALITY deletes refuse — the scan cannot see which rows they
-        hide — as do partition(-source) columns in SET and partition
-        columns in the predicate.  Renamed histories are SUPPORTED
-        (round 12): both the predicate scan and the rewrite-copy scan
-        resolve by name variant, and the copies land under the CURRENT
-        names.  Matches above :data:`DELETE_ROWS_LIMIT` switch to the
-        EXECUTOR tier (round 12, the last write-face cap lifted):
-        positions stay distributed end to end — existing position
-        deletes subtract via a sequence-aware anti-join on the delete
-        parquets read through Spark, the rewrite copies join the
-        distributed fresh frame, and the position-delete parquets
-        write straight from it."""
+        column -> literal or pyspark Column over the logical row, all
+        evaluated against the original row.  Rows existing position
+        deletes already hide are left alone (updating them would
+        resurrect deleted data).  Refuses tables with live equality
+        deletes (the scan cannot see which rows they hide), SET on
+        partition-source columns, partition predicate columns, and
+        live files under a non-default spec.  Renamed histories are
+        supported: the copies land under the current names.  Returns
+        the number of rows updated."""
         import pyarrow.parquet as pq
-        from pyspark.sql import Column
-        from pyspark.sql import functions as F
 
         if not set_values:
             raise ValueError("update_rows needs at least one SET")
@@ -2758,16 +2628,14 @@ class IcebergTable:
         meta = self.metadata()
         sid = meta.get("current-schema-id", 0)
         schema_fields = self._schema_by_id(sid)["fields"]
-        names = {f["name"] for f in schema_fields}
         by_id = {f["id"]: f["name"] for f in schema_fields}
-        part_sources = set()
-        for spec in meta.get("partition-specs", []):
-            for pf in spec.get("fields", []):
-                src = by_id.get(pf.get("source-id"))
-                if src:
-                    part_sources.add(src)
+        part_sources = {
+            by_id.get(pf.get("source-id"))
+            for spec in meta.get("partition-specs", [])
+            for pf in spec.get("fields", [])
+        }
         for c in set_values:
-            if c not in names:
+            if c not in by_id.values():
                 raise ValueError(f"no such column {c!r}")
             if c in part_sources:
                 raise NotImplementedError(
@@ -2786,282 +2654,109 @@ class IcebergTable:
                 "be stamped under the default spec while sourced from "
                 "another — use delete_rows + append to move those rows"
             )
-        cand, part_cols, per_raw, frame = self._matched_per_raw(
+        cand, part_cols, matched = self._match(
             spark, column_filter, "update_rows"
         )
-        if per_raw is None and frame is None:
+        if matched is None:
             return 0
         cand_by_raw = {f.raw_path: f for f in cand}
         pos_dels = [d for d in deletes
                     if d.content == _CONTENT_POS_DELETES]
-        fresh_frame = None
-        if frame is not None:
-            # EXECUTOR tier (round 12 — the last write-face cap
-            # lifted): the matched frame stays distributed; existing
-            # position deletes subtract via a SEQUENCE-AWARE anti-join
-            # against the delete parquets read through Spark, the
-            # rewrite-copy joins filter the fresh frame per partition
-            # group, and the position-delete parquets write straight
-            # from the frame.  The driver materializes only the
-            # affected file list (metadata scale).
-            raw_map = spark.createDataFrame(
-                [
-                    (_norm_path(f.path), f.raw_path, f.sequence)
-                    for f in cand
-                ],
-                ["_np", "_raw", "_fseq"],
-            )
-            decoded = F.url_decode(
-                F.regexp_replace(
-                    F.regexp_replace(
-                        F.col("_fp"), "^file:(//)?", ""
-                    ),
-                    r"\+",
-                    "%2B",
-                )
-            )
-            m = frame.withColumn("_np", decoded).join(
-                F.broadcast(raw_map), "_np", "left"
-            )
-            if pos_dels:
-                dels = None
-                for d in pos_dels:
-                    dfd = spark.read.parquet(d.path).select(
-                        F.col("file_path").alias("_d_file"),
-                        F.col("pos").cast("long").alias("_d_pos"),
-                        F.lit(d.sequence).alias("_dseq"),
-                    )
-                    dels = (dfd if dels is None
-                            else dels.unionByName(dfd))
-                m = m.join(
-                    dels,
-                    (m["_raw"] == dels["_d_file"])
-                    & (m["_pos"] == dels["_d_pos"])
-                    & (F.col("_fseq") <= dels["_dseq"]),
-                    "left_anti",
-                )
-            fresh_frame = m.persist()
-            if fresh_frame.where(F.col("_raw").isNull()).first():
-                fresh_frame.unpersist()
-                raise ValueError(
-                    "scanned file missing from the snapshot map "
-                    "(URI normalization mismatch) in the executor-tier "
-                    "update"
-                )
-            n_updated = fresh_frame.count()
-            if n_updated == 0:
-                fresh_frame.unpersist()
-                return 0
-            affected = sorted(
-                r[0]
-                for r in fresh_frame.select("_raw")
-                .distinct().collect()
-            )
-
-            def select_pairs(raws):
-                norms = [_norm_path(cand_by_raw[r].path)
-                         for r in raws]
-                return fresh_frame.where(
-                    F.col("_np").isin(norms)
-                ).select(F.col("_np").alias("_afp"), "_pos")
-        else:
-            #: rows existing POSITION deletes already hide, per raw
-            #: path — SEQUENCE-AWARE (round-11 review): a delete
-            #: applies to a data file only when data sequence ≤ delete
-            #: sequence, so a file re-added after the delete ignores
-            #: it on read and must ignore it here too.  Metadata-gated:
-            #: the summed record_count of the applicable delete files
-            #: must fit the same cap the match list obeys before any
-            #: payload is read (executor-tier updates read them
-            #: through Spark instead).
+        if matched.per_file is not None:
+            # existing position deletes, read on the driver: their
+            # summed record_count must fit the same cap the match list
+            # obeys before any payload is read
             total_del_rows = sum(d.record_count for d in pos_dels)
-            if total_del_rows > self.DELETE_ROWS_LIMIT:
+            if total_del_rows > rowlevel.DRIVER_ROW_LIMIT:
                 raise ValueError(
                     f"update_rows with {total_del_rows} existing "
                     "position-delete rows, over the driver "
                     "materialization cap — compact the table first"
                 )
-            pos_sets: dict[str, set[int]] = {}
+            hidden: dict[str, set[int]] = {}
             for d in pos_dels:
-                tb = pq.read_table(
-                    d.path, columns=["file_path", "pos"]
-                )
+                tb = pq.read_table(d.path, columns=["file_path", "pos"])
                 for fp, p in zip(tb["file_path"].to_pylist(),
                                  tb["pos"].to_pylist()):
                     f = cand_by_raw.get(fp)
                     if f is not None and f.sequence <= d.sequence:
-                        pos_sets.setdefault(fp, set()).add(p)
-            fresh = {
-                raw: poss - pos_sets.get(raw, set())
-                for raw, poss in per_raw.items()
-            }
-            fresh = {raw: poss for raw, poss in fresh.items() if poss}
-            if not fresh:
+                        hidden.setdefault(fp, set()).add(p)
+            fresh = {raw: poss - hidden.get(raw, set())
+                     for raw, poss in matched.per_file.items()}
+            matched.per_file = {r: p for r, p in fresh.items() if p}
+            n_updated = sum(len(v) for v in matched.per_file.values())
+        else:
+            matched.frame = self._executor_frame(
+                spark, cand, matched.frame, pos_dels
+            )
+            n_updated = matched.frame.count()
+            if n_updated:
+                matched.files = sorted(
+                    r[0] for r in
+                    matched.frame.select("_raw").distinct().collect()
+                )
+        try:
+            if n_updated == 0:
                 return 0
-            n_updated = sum(len(v) for v in fresh.values())
-            affected = sorted(fresh)
+            seq = meta["last-sequence-number"] + 1
+            variants = self._rename_history()
+            fid_of = {f["name"]: f["id"] for f in schema_fields}
+            scan_schema = self._spark_schema(
+                sid, exclude=set(part_cols), name_variants=variants
+            )
+            full = self._spark_schema(sid, exclude=set(part_cols))
 
-            def select_pairs(raws):
-                sel_rows = [
-                    (_norm_path(cand_by_raw[r].path), p)
-                    for r in raws
-                    for p in sorted(fresh[r])
-                ]
-                return F.broadcast(
-                    spark.createDataFrame(sel_rows, ["_afp", "_pos"])
+            def read(raws):
+                return rowlevel.lineage_scan(
+                    spark, [cand_by_raw[r].path for r in raws],
+                    scan_schema,
+                    {f.name: _variant_col(variants, fid_of[f.name],
+                                          f.name)
+                     for f in full.fields},
                 )
-        groups: dict[tuple, list[str]] = {}
-        for raw in affected:
-            pv = cand_by_raw[raw].partition
-            groups.setdefault(tuple(sorted(pv.items())), []).append(raw)
-        seq = meta["last-sequence-number"] + 1
-        variants = self._rename_history()
-        fid_of = {
-            f["name"]: f["id"]
-            for f in self._schema_by_id(sid)["fields"]
-        }
-        scan_schema = self._spark_schema(
-            sid, exclude=set(part_cols), name_variants=variants
-        )
-        full = self._spark_schema(sid, exclude=set(part_cols))
-        spark_types = {f.name: f.dataType for f in full.fields}
 
-        def _lcol(name):
-            # logical column across rename variants (read-path rule):
-            # a conforming file carries exactly one historical name
-            vs = (variants.get(fid_of[name], [name]) if variants
-                  else [name])
-            return F.coalesce(*[F.col(n) for n in vs])
-
-        new_entries: list[dict] = []
-        spec_fields = self._spec_fields(meta, 0)
-        for gi, pv_t in enumerate(sorted(groups)):
-            raws = groups[pv_t]
-            src = spark.read.schema(scan_schema).parquet(
-                *[cand_by_raw[r].path for r in raws]
-            ).select(
-                F.col("_metadata.file_path").alias("_fp"),
-                F.col("_metadata.row_index").alias("_pos"),
-                *[_lcol(f.name).alias(f.name) for f in full.fields],
-            )
-            decoded = F.url_decode(
-                F.regexp_replace(
-                    F.regexp_replace(F.col("_fp"), "^file:(//)?", ""),
-                    r"\+",
-                    "%2B",
-                )
-            )
-            upd = src.withColumn("_afp", decoded).join(
-                select_pairs(raws), ["_afp", "_pos"], "inner"
-            )
-            # ONE select: every SET expression evaluates against the
-            # ORIGINAL row (simultaneous-assignment UPDATE semantics)
-            exprs = {
-                c: (v if isinstance(v, Column) else F.lit(v))
-                .cast(spark_types[c])
-                for c, v in set_values.items()
-            }
-            out = upd.select(*[
-                exprs.get(f.name, F.col(f.name)).alias(f.name)
-                for f in full.fields
-            ])
-            rel_new = f"data/part-update-{seq}-{gi}.parquet"
-            dest = os.path.join(self.dir, rel_new)
             from hadoop_sync_spark.io import write_single_parquet
 
-            write_single_parquet(out, dest, "iceberg_update_")
-            lb, ub = parquet_column_bounds(dest, schema_fields)
-            n_rows = pq.read_metadata(dest).num_rows
-            new_entries.append({
-                "status": _STATUS_ADDED,
-                "snapshot_id": None,
-                "sequence_number": None,
-                "file_sequence_number": None,
-                "data_file": {
-                    "content": _CONTENT_DATA,
-                    "file_path": rel_new,
-                    "file_format": "PARQUET",
-                    "partition": dict(pv_t),
-                    "record_count": n_rows,
-                    "file_size_in_bytes": os.path.getsize(dest),
-                    "equality_ids": None,
-                    "lower_bounds": [
-                        {"key": k, "value": v}
-                        for k, v in sorted(lb.items())
-                    ] or None,
-                    "upper_bounds": [
-                        {"key": k, "value": v}
-                        for k, v in sorted(ub.items())
-                    ] or None,
-                },
-            })
-        # the position-delete file(s) covering the replaced rows
-        if fresh_frame is not None:
-            del_entries = self._pos_delete_entries_from_frame(
-                fresh_frame.select(
-                    F.col("_raw").alias("file_path"),
-                    F.col("_pos").cast("long").alias("pos"),
+            new_entries: list[dict] = []
+            for gi, pv_t, rows, exprs in rowlevel.updated_groups(
+                spark, matched,
+                rowlevel.group_by_partition(
+                    matched.keys, lambda raw: cand_by_raw[raw].partition
                 ),
-                n_updated, meta, seq,
+                read, set_values,
+                {f.name: f.dataType for f in full.fields},
+            ):
+                rel_new = f"data/part-update-{seq}-{gi}.parquet"
+                dest = os.path.join(self.dir, rel_new)
+                write_single_parquet(
+                    rows.select(*[e.alias(n) for n, e in exprs.items()]),
+                    dest, "iceberg_update_",
+                )
+                new_entries.append(
+                    _written_entry(dest, rel_new, dict(pv_t), schema_fields)
+                )
+            self._commit_snapshot(
+                self._live_entries() + new_entries,
+                "overwrite",
+                now_ms,
+                delete_entries=self._live_delete_entries()
+                + self._pos_delete_entries(matched, n_updated, meta, seq),
             )
-            fresh_frame.unpersist()
-        else:
-            pairs = sorted(
-                (raw, p) for raw in fresh for p in fresh[raw]
-            )
-            import pyarrow as pa
-
-            del_rel = f"data/delete-pos-{seq}.parquet"
-            del_path = os.path.join(self.dir, del_rel)
-            pq.write_table(
-                pa.table({
-                    "file_path": pa.array([p for p, _ in pairs],
-                                          pa.string()),
-                    "pos": pa.array([p for _, p in pairs],
-                                    pa.int64()),
-                }),
-                del_path,
-            )
-            del_entries = [{
-                "status": _STATUS_ADDED,
-                "snapshot_id": None,
-                "sequence_number": None,
-                "file_sequence_number": None,
-                "data_file": {
-                    "content": _CONTENT_POS_DELETES,
-                    "file_path": del_rel,
-                    "file_format": "PARQUET",
-                    "partition": {
-                        f["name"]: None for f in spec_fields
-                    },
-                    "record_count": len(pairs),
-                    "file_size_in_bytes": os.path.getsize(del_path),
-                    "equality_ids": None,
-                },
-            }]
-        self._commit_snapshot(
-            self._live_entries() + new_entries,
-            "overwrite",
-            now_ms,
-            delete_entries=self._live_delete_entries() + del_entries,
-        )
-        return n_updated
+            return n_updated
+        finally:
+            matched.release()
 
     def add_equality_deletes(
         self, rows: list[dict], equality_ids: list[int], now_ms: int = 0
     ) -> int:
-        """Merge-on-read EQUALITY delete — the documented write face
-        (round 11; the Iceberg twin of the Delta DV writer
-        :meth:`DeltaLog.add_deletion_vector`, spec "Equality Delete
-        Files" / "Sequence Numbers").  Writes one delete parquet holding
-        the equality columns (keyed by schema FIELD IDS; the file's
-        column names are the current schema's names for those ids) and
-        commits it in a delete manifest (content=2) whose entry leaves
-        ``sequence_number`` null — the commit's own sequence number is
-        INHERITED per the spec's assignment rule, which is what makes
-        the semantics right: the delete applies at read time to data
-        files STRICTLY OLDER (data sequence < delete sequence), so a
-        row re-inserted with the same key after the delete survives —
+        """Merge-on-read EQUALITY delete (spec "Equality Delete Files" /
+        "Sequence Numbers"): write one delete parquet holding the
+        equality columns (keyed by schema FIELD IDS; the file's column
+        names are the current schema's names for those ids) and commit
+        it in a delete manifest (content=2) whose entry inherits the
+        commit's sequence number.  The delete applies at read time to
+        data files STRICTLY OLDER (data sequence < delete sequence), so
+        a row re-inserted with the same key after the delete survives —
         upsert semantics, pinned by
         tests/test_iceberg.py::test_equality_deletes_upsert_semantics.
         ``rows`` are keyed by the CURRENT schema's column names; a
@@ -3083,41 +2778,35 @@ class IcebergTable:
         key_col: str,
         now_ms: int = 0,
     ) -> dict:
-        """MERGE/upsert the Flink-CDC way (round 11): ONE snapshot
-        commits the source rows as a new data file (footer bounds
-        stamped) PLUS an equality-delete file on ``key_col`` covering
-        the source keys.  **No target scan at any size** — the work is
-        O(source), never O(table), because the spec does the matching
-        at read time: the equality delete hides old rows with those
-        keys in STRICTLY older files (sequence <), and the same-commit
-        data file is exempt by exactly that strictness, so the new
-        versions survive.  This is how production streaming writers
-        land CDC upserts on 100 TB tables without reading them.
-        ``source`` is a DataFrame carrying exactly the table's data
-        columns (extra columns refuse; missing ones null-fill is NOT
-        assumed — refuse, an upsert that silently nulls columns is a
-        data bug).  Distinct source keys under
-        :data:`DELETE_ROWS_LIMIT` materialize driver-side for the
-        delete file; above it the EXECUTOR tier (round 12) writes the
-        sorted delete parquet straight from the distributed frame.
-        Partitioned tables (round 12) split the source per partition
-        tuple and land one data file per tuple in the same snapshot,
-        each stamped with its tuple and footer bounds; the equality
-        delete stays table-wide (all-null tuple) so old rows hide
-        across every partition, exactly the Flink-CDC shape.
-        Bucket/truncate/temporal default specs are supported too
-        (round 13): the transform value derives per source row via
-        :func:`transform_column` — the spec-vector-verified functions
-        the pruning layers use — with the source column kept in the
-        data files.  Renamed histories are fine — equality deletes
-        resolve by field id on the read side."""
+        """MERGE/upsert the Flink-CDC way: ONE snapshot commits the
+        source rows as new data (footer bounds stamped) PLUS an
+        equality-delete file on ``key_col`` covering the source keys.
+        There is no target scan at any size — the work is O(source),
+        because the spec matches at read time: the equality delete
+        hides old rows with those keys in STRICTLY older files, and the
+        same-commit data files are exempt by exactly that strictness.
+        ``source`` carries exactly the table's data columns (extra or
+        missing columns refuse).  The distinct cast keys collect on the
+        driver tier; above :data:`rowlevel.DRIVER_ROW_LIMIT` the sorted
+        delete parquet writes straight from the distributed keys.  NULL
+        keys refuse.  A partitioned default spec splits the source per
+        partition tuple, one data file each: identity fields stamp the
+        source value (the column stays out of the data files), other
+        transforms derive per row through :func:`transform_column` with
+        the source column kept.  The equality delete stays table-wide
+        (all-null tuple), so old rows hide across every partition.
+        Renamed histories are fine: equality deletes resolve by field
+        id on the read side.  Returns ``{snapshot_id, rows, keys}``; an
+        empty source commits nothing."""
+        import pyarrow.parquet as _pq
         from pyspark.sql import functions as F
+
+        from hadoop_sync_spark.io import write_single_parquet
 
         meta = self.metadata()
         sid = meta.get("current-schema-id", 0)
         schema_fields = self._schema_by_id(sid)["fields"]
         names = [f["name"] for f in schema_fields]
-        by_id = {f["id"]: f["name"] for f in schema_fields}
         if key_col not in names:
             raise ValueError(f"no such column {key_col!r}")
         part_cols, field_of, derived, pv_encode = (
@@ -3144,150 +2833,71 @@ class IcebergTable:
         )
         if key_typ not in ("long", "int", "string", "double",
                            "boolean"):
-            # fail BEFORE any file writes — _equality_delete_entry
-            # would refuse this type after the data file landed,
-            # leaving an orphan (r11 review)
+            # fail BEFORE any file writes: _equality_delete_entry would
+            # refuse this type after the data file landed
             raise NotImplementedError(
                 f"merge_upsert key on {key_typ!r} column: equality "
                 "deletes support scalar long/int/string/double/boolean "
                 "keys"
             )
         full = self._spark_schema(sid)
-        cap = self.DELETE_ROWS_LIMIT
-        # collect the CAST key values — the delete file must carry
-        # exactly what the data file stores (r11 review)
-        from pyspark.sql import functions as _F
-
-        keys_df = source.select(
-            _F.col(key_col).cast(full[key_col].dataType)
-        ).distinct()
-        keys = [r[0] for r in keys_df.limit(cap + 1).collect()]
-        if not keys:
+        # the CAST key values: the delete file must carry exactly what
+        # the data file stores
+        keys_df, keys = rowlevel.merge_keys(
+            source, key_col, full[key_col].dataType
+        )
+        if keys == []:
             return {"snapshot_id": None, "rows": 0, "keys": 0}
-        over_cap_keys = len(keys) > cap
-        if over_cap_keys:
-            # EXECUTOR tier (round 12): the key set never materializes
-            # — the null check becomes an aggregate and the delete
-            # parquet writes from the distributed frame below
-            if keys_df.where(
-                _F.col(key_col).isNull()
-            ).limit(1).count():
-                raise ValueError(
-                    "merge_upsert source contains NULL keys — upsert "
-                    "keys must be non-null"
-                )
-        elif any(k is None for k in keys):
-            # keep the format twins consistent: Delta's `=` match can
-            # never hit NULL while our equality read is null-safe — a
-            # null-keyed upsert is ambiguous, both faces refuse
-            raise ValueError(
-                "merge_upsert source contains NULL keys — upsert keys "
-                "must be non-null"
-            )
         cast_src = source.select(*[
             F.col(n).cast(full[n].dataType) for n in names
         ])
         seq = meta["last-sequence-number"] + 1
-        from hadoop_sync_spark.io import write_single_parquet
-
-        import pyarrow.parquet as _pq
-
         data_names = [n for n in names if n not in part_cols]
-        data_schema_fields = [
-            f for f in schema_fields if f["name"] not in part_cols
-        ]
-
-        def _data_entry(rel, pv, rows, dest):
-            lb, ub = parquet_column_bounds(dest, data_schema_fields)
-            return {
-                "status": _STATUS_ADDED,
-                "snapshot_id": None,
-                "sequence_number": None,
-                "file_sequence_number": None,
-                "data_file": {
-                    "content": _CONTENT_DATA,
-                    "file_path": rel,
-                    "file_format": "PARQUET",
-                    "partition": pv,
-                    "record_count": rows,
-                    "file_size_in_bytes": os.path.getsize(dest),
-                    "equality_ids": None,
-                    "lower_bounds": [
-                        {"key": k, "value": v}
-                        for k, v in sorted(lb.items())
-                    ] or None,
-                    "upper_bounds": [
-                        {"key": k, "value": v}
-                        for k, v in sorted(ub.items())
-                    ] or None,
-                },
-            }
-
+        data_fields = [f for f in schema_fields if f["name"] in data_names]
         data_entries: list[dict] = []
-        n_rows = 0
         if part_cols or derived:
-            # per-tuple split; transform fields (round 13) derive
-            # once per row into helper columns, identity fields split
-            # on the source — the append_stream_batch shape
+            # per-tuple split: transform fields derive once per row
+            # into helper columns, identity fields split on the source
             work = cast_src
             for h, _, expr in derived:
                 work = work.withColumn(h, expr)
             key_cols = [*part_cols, *[h for h, _, _ in derived]]
-            tuples, cond_for = self._split_tuples(work, key_cols)
+            tuples, cond_for = rowlevel.split_tuples(work, key_cols)
             for gi, t in enumerate(tuples):
-                out = work.where(cond_for(t)).select(*data_names)
                 rel_new = f"data/part-upsert-{seq}-{gi}.parquet"
                 dest = os.path.join(self.dir, rel_new)
-                write_single_parquet(out, dest, "iceberg_upsert_")
-                rows = _pq.read_metadata(dest).num_rows
-                n_rows += rows
-                pv = {field_of[c]: pv_encode(c, t[c])
-                      for c in part_cols}
+                write_single_parquet(
+                    work.where(cond_for(t)).select(*data_names), dest,
+                    "iceberg_upsert_",
+                )
+                pv = {field_of[c]: pv_encode(c, t[c]) for c in part_cols}
                 pv.update({fn: t[h] for h, fn, _ in derived})
-                data_entries.append(_data_entry(
-                    rel_new, pv, rows, dest,
-                ))
+                data_entries.append(
+                    _written_entry(dest, rel_new, pv, data_fields)
+                )
         else:
             rel_new = f"data/part-upsert-{seq}.parquet"
             dest = os.path.join(self.dir, rel_new)
             write_single_parquet(cast_src, dest, "iceberg_upsert_")
-            n_rows = _pq.read_metadata(dest).num_rows
-            data_entries.append(_data_entry(rel_new, {}, n_rows, dest))
-        if over_cap_keys:
-            # the delete parquet writes straight from the distributed
-            # distinct-keys frame, sorted — the driver sees only the
-            # footer metadata for the manifest entry
-            seq_d = meta["last-sequence-number"] + 1
-            del_rel = f"data/delete-eq-{seq_d}.parquet"
+            data_entries.append(
+                _written_entry(dest, rel_new, {}, data_fields)
+            )
+        if keys is None:
+            # executor tier: the sorted delete parquet writes straight
+            # from the distributed distinct keys
+            del_rel = f"data/delete-eq-{seq}.parquet"
             del_path = os.path.join(self.dir, del_rel)
             write_single_parquet(
                 keys_df.sort(key_col), del_path, "iceberg_eqdel_"
             )
-            n_keys = _pq.read_metadata(del_path).num_rows
-            spec_fields = self._spec_fields(meta, 0)
-            del_entry = {
-                "status": _STATUS_ADDED,
-                "snapshot_id": None,
-                "sequence_number": None,
-                "file_sequence_number": None,
-                "data_file": {
-                    "content": _CONTENT_EQ_DELETES,
-                    "file_path": del_rel,
-                    "file_format": "PARQUET",
-                    "partition": {
-                        f["name"]: None for f in spec_fields
-                    },
-                    "record_count": n_keys,
-                    "file_size_in_bytes": os.path.getsize(del_path),
-                    "equality_ids": [key_fid],
-                },
-            }
+            del_entry = _added_entry(
+                _CONTENT_EQ_DELETES, del_rel, self._null_partition(meta),
+                _pq.read_metadata(del_path).num_rows,
+                os.path.getsize(del_path), equality_ids=[key_fid],
+            )
         else:
-            n_keys = len(keys)
             del_entry = self._equality_delete_entry(
-                [{key_col: k}
-                 for k in sorted(keys)],
-                [key_fid],
+                [{key_col: k} for k in sorted(keys)], [key_fid]
             )
         snap_id = self._commit_snapshot(
             self._live_entries() + data_entries,
@@ -3295,8 +2905,12 @@ class IcebergTable:
             now_ms,
             delete_entries=self._live_delete_entries() + [del_entry],
         )
-        return {"snapshot_id": snap_id, "rows": n_rows,
-                "keys": n_keys}
+        return {
+            "snapshot_id": snap_id,
+            "rows": sum(e["data_file"]["record_count"]
+                        for e in data_entries),
+            "keys": del_entry["data_file"]["record_count"],
+        }
 
     def incremental_scan(
         self,
@@ -3777,22 +3391,11 @@ class IcebergTable:
                 )
             cols[name] = pa.array([r[name] for r in rows], arrow_t[typ])
         pq.write_table(pa.table(cols), path)
-        spec_fields = self._spec_fields(meta, 0)
-        return {
-            "status": _STATUS_ADDED,
-            "snapshot_id": None,
-            "sequence_number": None,
-            "file_sequence_number": None,
-            "data_file": {
-                "content": _CONTENT_EQ_DELETES,
-                "file_path": rel,
-                "file_format": "PARQUET",
-                "partition": {f["name"]: None for f in spec_fields},
-                "record_count": len(rows),
-                "file_size_in_bytes": os.path.getsize(path),
-                "equality_ids": list(equality_ids),
-            },
-        }
+        return _added_entry(
+            _CONTENT_EQ_DELETES, rel, self._null_partition(meta),
+            len(rows), os.path.getsize(path),
+            equality_ids=list(equality_ids),
+        )
 
     def _schema_by_id(self, sid: int) -> dict:
         for s in self.metadata().get("schemas", []):
@@ -4526,33 +4129,8 @@ class IcebergTable:
                 e = dict(e)
                 e["status"] = _STATUS_DELETED
             entries.append(e)
-        entries += [
-            {
-                "status": _STATUS_ADDED,
-                "snapshot_id": None,
-                "sequence_number": None,  # inherits the new sequence
-                "file_sequence_number": None,
-                "spec_id": f.spec_id,
-                "data_file": {
-                    "content": _CONTENT_DATA,
-                    "file_path": f.path,
-                    "file_format": "PARQUET",
-                    "partition": f.partition,
-                    "record_count": f.record_count,
-                    "file_size_in_bytes": f.file_size,
-                    "equality_ids": None,
-                    "lower_bounds": [
-                        {"key": k, "value": v}
-                        for k, v in sorted(f.lower_bounds.items())
-                    ] or None,
-                    "upper_bounds": [
-                        {"key": k, "value": v}
-                        for k, v in sorted(f.upper_bounds.items())
-                    ] or None,
-                },
-            }
-            for f in new_files
-        ]
+        entries += [{**_file_entry(f), "spec_id": f.spec_id}
+                    for f in new_files]
         snap_id = self._commit_snapshot(
             entries,
             "replace",

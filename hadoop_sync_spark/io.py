@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
 
 #: Every fixture table (TESTDATA.md).  Order: dims → facts → L3 tables.
@@ -141,16 +141,27 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
+_FILE_SCHEME = "^file:(//)?"
+
+
 def decode_file_uri(fp: str) -> str:
-    """Driver-side twin of :func:`attach_file_columns`'s Spark-side
-    decode: Spark's ``_metadata.file_path`` / ``input_file_name()``
-    yield a percent-encoded ``file:`` URI; strip the scheme, protect
-    literal ``+`` (x-www-form-urlencoded would read it as space), and
-    decode the percent-escapes back to a plain absolute path."""
+    """Spark's ``_metadata.file_path`` / ``input_file_name()`` yield a
+    percent-encoded ``file:`` URI; strip the scheme, protect literal
+    ``+`` (x-www-form-urlencoded would read it as space), and decode the
+    percent-escapes back to a plain absolute path."""
     import re as _re
     from urllib.parse import unquote as _unquote
 
-    return _unquote(_re.sub("^file:(//)?", "", fp).replace("+", "%2B"))
+    return _unquote(_re.sub(_FILE_SCHEME, "", fp).replace("+", "%2B"))
+
+
+def decoded_path_col(uri: Column) -> Column:
+    """Spark-side twin of :func:`decode_file_uri` over a file-URI
+    column."""
+    return F.url_decode(
+        F.regexp_replace(F.regexp_replace(uri, _FILE_SCHEME, ""),
+                         r"\+", "%2B")
+    )
 
 
 def write_single_parquet(df: DataFrame, dest: str, prefix: str) -> None:
@@ -213,14 +224,9 @@ def attach_file_columns(
         part_map = scan.sparkSession.createDataFrame(
             rows, ["_file", "_matched", *columns]
         )
-    decoded = F.url_decode(
-        F.regexp_replace(
-            F.regexp_replace(F.input_file_name(), "^file:(//)?", ""),
-            r"\+",
-            "%2B",
-        )
-    )
-    joined = scan.withColumn("_file", decoded).join(
+    joined = scan.withColumn(
+        "_file", decoded_path_col(F.input_file_name())
+    ).join(
         F.broadcast(part_map), "_file", "left"
     )
     err = F.raise_error(

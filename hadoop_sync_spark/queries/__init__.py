@@ -146,400 +146,6 @@ _DRIVER_ORDER: tuple[str, ...] = (
 )
 
 
-_ROUND13_WINDOW_HISTORICAL: tuple[str, ...] = (
-    # ---- ROUND-13 WINDOW (historical, kept for the ledger narrative) ----
-    # Backlog entering round 13 (ledger-recomputed; matches WINDOW.md's
-    # pre-written round-13 runbook name-for-name): the 49-query r10-green
-    # cohort, last green three recorded rounds ago after CORRECTNESS_r12 —
-    # strict branch (49 <= 50), all mandatory (rule 3).  Pre-checked green
-    # on final round-12 code (WINDOW.md round-13 pre-check: 59/59 via
-    # prefix-widened driver_sweep).  The one spare slot went to
-    # q149_delta_dv_reader (rule-2 protective): round-13 library work
-    # extends the Delta column-mapping surface (id-mode write faces per
-    # VERDICT r12 item 5) adjacent to the mapped read path its fixture
-    # routes through, and an in-window rule-2 change re-greens for free
-    # (WINDOW.md displacement case 1).
-    # CORRECTNESS_r13: 50/50 green.
-    # (3) the cohort in numeric order, then the spare
-    "q02_filter_predicates",
-    "q03_top_unshipped_orders",
-    "q07_customers_without_orders",
-    "q08_late_shipments",
-    "q09_distinct_counts",
-    "q12_top_orders_per_customer",
-    "q17_scalar_functions",
-    "q20_brand_stats_having",
-    "q21_regional_revenue",
-    "q22_explode_embedding_prefix",
-    "q23_grouping_sets",
-    "q25_minby_maxby",
-    "q27_string_agg",
-    "q28_window_navigation",
-    "q29_outer_joins",
-    "q30_event_range_join",
-    "q31_asof_join",
-    "q38_exists_subquery",
-    "q51_fingerprint_groups",
-    "q55_tfidf",
-    "q56_top_terms_per_lang",
-    "q59_repetition_signals",
-    "q63_minhash_lsh_pairs",
-    "q66_simhash_pairs",
-    "q67_chargram_jaccard_pairs",
-    "q68_dup_components",
-    "q72_rp_lsh_topk",
-    "q91_image_resize",
-    "q92_frame_sample",
-    "q96_dup_profile",
-    "q100_column_profile",
-    "q107_weighted_priority_sample",
-    "q109_fingerprint_drilldown",
-    "q110_span_dedup",
-    "q111_pq_topk",
-    "q114_ivf_pq_topk",
-    "q115_per_source_quality_gate",
-    "q116_eval_per_lang",
-    "q118_split_leakage",
-    "q137_copurchase_pagerank",
-    "q138_delta_log_reader",
-    "q139_bm25_topk",
-    "q140_cogroup_asof_align",
-    "q141_ngram_novelty",
-    "q142_length_matched_controls",
-    "q143_cdc_chunk_dups",
-    "q144_delta_registry_sync",
-    "q145_png_roundtrip_stats",
-    "q146_jpeg_roundtrip_stats",
-    # (spare, rule-2 protective in-window) delta mapped read-path re-check
-    "q149_delta_dv_reader",
-)
-
-
-_ROUND12_WINDOW_HISTORICAL: tuple[str, ...] = (
-    # ---- ROUND-12 WINDOW (historical, kept for the ledger narrative) ----
-    # Backlog entering round 12 (ledger-recomputed; matches WINDOW.md's
-    # pre-written round-12 runbook name-for-name): the 46-query r9-green
-    # cohort + q01 + q148 + q149 — 49 mandatory (rule 3), strict branch
-    # (49 <= 50).  q148/q149's rows are the first driver-channel execution
-    # of their round-10 evolved-fixture branches (column_filter-composed
-    # MoR; column mapping + v2-checkpoint seeding + the round-11
-    # committed-protocol-upgrade path), closing VERDICT r10 "What's
-    # missing" #1.  The one spare slot went to q147_iceberg_snapshot_reader
-    # (rule-2 protective): round-12 library work changes the iceberg read
-    # path (ADVICE r11 _apply_residue eqNullSafe fix) that its fixture
-    # routes through, and an in-window rule-2 change re-greens for free
-    # (WINDOW.md displacement case 1).
-    # CORRECTNESS_r12: 50/50 green.
-    # (3) the cohort in numeric order, then q148/q149, then the spare
-    "q01_pricing_summary",
-    "q26_conditional_agg",
-    "q32_approx_distinct",
-    "q46_json_map_explode",
-    "q47_streaming_tumbling_window",
-    "q48_approx_percentiles",
-    "q49_attribution_join",
-    "q50_token_stats",
-    "q52_lang_profile",
-    "q53_quality_scores",
-    "q54_lang_id_heuristic",
-    "q57_bpe_pretokens",
-    "q58_rolling_hash_fp",
-    "q60_exact_dedup",
-    "q61_token_set_dedup",
-    "q62_jaccard_pairs",
-    "q64_simhash_signatures",
-    "q65_embedding_dup_pairs",
-    "q70_cosine_topk",
-    "q71_ivf_topk",
-    "q73_stratified_sample",
-    "q74_train_val_test_split",
-    "q76_udtf_sentences",
-    "q77_ngram_stats",
-    "q78_corpus_mix",
-    "q79_sequence_packing",
-    "q80_minmax_stats",
-    "q86_pii_redaction",
-    "q87_contamination_screen",
-    "q88_token_budget_sample",
-    "q89_corpus_merge",
-    "q93_unpivot_metrics",
-    "q94_regression_stats",
-    "q97_table_fingerprint_diff",
-    "q98_heavy_hitters",
-    "q99_incremental_dedup",
-    "q101_time_travel",
-    "q103_zorder_box_query",
-    "q104_format_roundtrip",
-    "q105_misra_gries",
-    "q108_edit_distance_pairs",
-    "q112_quality_constraints",
-    "q113_shard_shuffle",
-    "q133_doc_chunks",
-    "q134_interval_weighted_avg",
-    "q135_k_anonymity",
-    "q136_token_pmi",
-    "q148_iceberg_mor_reader",
-    "q149_delta_dv_reader",
-    # (spare, rule-2 protective in-window) iceberg read-path re-check
-    "q147_iceberg_snapshot_reader",
-)
-
-
-_ROUND11_WINDOW_HISTORICAL: tuple[str, ...] = (
-    # ---- ROUND-11 WINDOW (historical, kept for the ledger narrative) ----
-    # Backlog entering round 11 (ledger-recomputed; the tripwire's stale
-    # list matches WINDOW.md's round-11 runbook name-for-name): the
-    # 50-query r8-green cohort, last green three recorded rounds ago after
-    # CORRECTNESS_r10 — strict branch (50 <= 50), all mandatory (rule 3),
-    # ZERO spare.  Round 11 registered nothing (the 149 cap forbids it) and
-    # shipped no rule-2 change to an out-of-window query without a case-2
-    # contract re-verification recorded in WINDOW.md.
-    # CORRECTNESS_r11: 50/50 green.
-    # (3) the full r8-green cohort, numeric order
-    "q04_supplier_by_region",
-    "q05_order_count_distribution",
-    "q06_customers_with_open_orders",
-    "q10_rollup_orders",
-    "q11_cube_lineitem",
-    "q13_event_gaps",
-    "q14_running_customer_spend",
-    "q15_nation_set_ops",
-    "q16_distinct_segments",
-    "q18_json_extract",
-    "q19_array_ops",
-    "q24_exact_median",
-    "q33_pivot_returnflag",
-    "q34_exact_variance",
-    "q35_date_arithmetic",
-    "q36_regexp_text",
-    "q37_multiset_ops",
-    "q39_scalar_in_subquery",
-    "q40_tumbling_window",
-    "q41_sliding_window",
-    "q42_session_windows",
-    "q43_dedup_events",
-    "q44_salted_skew_agg",
-    "q45_grouped_mode_udaf",
-    "q69_semantic_dedup",
-    "q75_gap_fill_locf",
-    "q81_registry_pruned_scan",
-    "q82_registry_sync_lifecycle",
-    "q83_notin_supplier_cnt",
-    "q84_disjunctive_join_revenue",
-    "q85_correlated_max_qty",
-    "q90_media_features",
-    "q95_compaction_lifecycle",
-    "q102_schema_evolution",
-    "q106_chain_components",
-    "q117_bloom_incremental_dedup",
-    "q119_scd2_intervals",
-    "q120_funnel_conversion",
-    "q121_bigram_lm_quality",
-    "q122_rolling_7d_revenue",
-    "q123_copurchase_triangles",
-    "q124_retention_cohorts",
-    "q125_event_trigrams",
-    "q126_snapshot_cdc",
-    "q127_vocab_build",
-    "q128_price_size_skyline",
-    "q129_audio_energy_segments",
-    "q130_robust_source_stats",
-    "q131_temperature_mix",
-    "q132_posting_blocks",
-)
-
-
-_ROUND10_WINDOW_HISTORICAL: tuple[str, ...] = (
-    # ---- ROUND-10 WINDOW (historical, kept for the ledger narrative) ----
-    # Backlog entering round 10 (ledger-recomputed, matches WINDOW.md's
-    # round-10 preview name-for-name): the 49-query r7-green cohort — q01
-    # re-greened in r9's spare slot, leaving 49 of the 50 — strict branch
-    # (49 <= 50), all mandatory (rule 3).  The one spare slot went to
-    # q147_iceberg_snapshot_reader: its fixture was evolved that round to
-    # route through the round-9 schema-evolution + column_filter read
-    # branches (VERDICT r9 "What's missing" #1), and a rule-2 change to an
-    # in-window query re-greens for free (WINDOW.md displacement case 1).
-    # CORRECTNESS_r10: 50/50 green.
-    # (3) the full r7-green cohort, numeric order
-    "q02_filter_predicates",
-    "q03_top_unshipped_orders",
-    "q07_customers_without_orders",
-    "q08_late_shipments",
-    "q09_distinct_counts",
-    "q12_top_orders_per_customer",
-    "q17_scalar_functions",
-    "q20_brand_stats_having",
-    "q21_regional_revenue",
-    "q22_explode_embedding_prefix",
-    "q23_grouping_sets",
-    "q25_minby_maxby",
-    "q27_string_agg",
-    "q28_window_navigation",
-    "q29_outer_joins",
-    "q30_event_range_join",
-    "q31_asof_join",
-    "q38_exists_subquery",
-    "q51_fingerprint_groups",
-    "q55_tfidf",
-    "q56_top_terms_per_lang",
-    "q59_repetition_signals",
-    "q63_minhash_lsh_pairs",
-    "q66_simhash_pairs",
-    "q67_chargram_jaccard_pairs",
-    "q68_dup_components",
-    "q72_rp_lsh_topk",
-    "q91_image_resize",
-    "q92_frame_sample",
-    "q96_dup_profile",
-    "q100_column_profile",
-    "q107_weighted_priority_sample",
-    "q109_fingerprint_drilldown",
-    "q110_span_dedup",
-    "q111_pq_topk",
-    "q114_ivf_pq_topk",
-    "q115_per_source_quality_gate",
-    "q116_eval_per_lang",
-    "q118_split_leakage",
-    "q137_copurchase_pagerank",
-    "q138_delta_log_reader",
-    "q139_bm25_topk",
-    "q140_cogroup_asof_align",
-    "q141_ngram_novelty",
-    "q142_length_matched_controls",
-    "q143_cdc_chunk_dups",
-    "q144_delta_registry_sync",
-    "q145_png_roundtrip_stats",
-    "q146_jpeg_roundtrip_stats",
-    # (spare, rule-2 in-window) evolved-fixture lakehouse re-check
-    "q147_iceberg_snapshot_reader",
-)
-
-
-_ROUND9_WINDOW_HISTORICAL: tuple[str, ...] = (
-    # ---- ROUND-9 WINDOW (historical, kept for the ledger narrative) ----
-    # The 46-query r6-green cohort (rule 3) + the three first-ever
-    # lakehouse registrations q147/q148/q149 (rule 1) + q01 as the pinned
-    # spare.  CORRECTNESS_r09: 50/50 green.
-    "q147_iceberg_snapshot_reader",
-    "q148_iceberg_mor_reader",
-    "q149_delta_dv_reader",
-    "q26_conditional_agg",
-    "q32_approx_distinct",
-    "q46_json_map_explode",
-    "q47_streaming_tumbling_window",
-    "q48_approx_percentiles",
-    "q49_attribution_join",
-    "q50_token_stats",
-    "q52_lang_profile",
-    "q53_quality_scores",
-    "q54_lang_id_heuristic",
-    "q57_bpe_pretokens",
-    "q58_rolling_hash_fp",
-    "q60_exact_dedup",
-    "q61_token_set_dedup",
-    "q62_jaccard_pairs",
-    "q64_simhash_signatures",
-    "q65_embedding_dup_pairs",
-    "q70_cosine_topk",
-    "q71_ivf_topk",
-    "q73_stratified_sample",
-    "q74_train_val_test_split",
-    "q76_udtf_sentences",
-    "q77_ngram_stats",
-    "q78_corpus_mix",
-    "q79_sequence_packing",
-    "q80_minmax_stats",
-    "q86_pii_redaction",
-    "q87_contamination_screen",
-    "q88_token_budget_sample",
-    "q89_corpus_merge",
-    "q93_unpivot_metrics",
-    "q94_regression_stats",
-    "q97_table_fingerprint_diff",
-    "q98_heavy_hitters",
-    "q99_incremental_dedup",
-    "q101_time_travel",
-    "q103_zorder_box_query",
-    "q104_format_roundtrip",
-    "q105_misra_gries",
-    "q108_edit_distance_pairs",
-    "q112_quality_constraints",
-    "q113_shard_shuffle",
-    "q133_doc_chunks",
-    "q134_interval_weighted_avg",
-    "q135_k_anonymity",
-    "q136_token_pmi",
-    "q01_pricing_summary",
-)
-
-
-_ROUND8_WINDOW_HISTORICAL: tuple[str, ...] = (
-    # ---- ROUND-8 WINDOW (historical, kept for the ledger narrative) ----
-    # Round 7 drained the r3-green cohort; the backlog entering round 8
-    # is the 49-query r5-green cohort (last green three recorded rounds
-    # ago after CORRECTNESS_r07) — strict branch applies (49 <= 50) and
-    # windows all of them mandatorily.  Plan in WINDOW.md round-8 section.
-    # (3) the full r5-green cohort, numeric order
-    "q04_supplier_by_region",
-    "q05_order_count_distribution",
-    "q06_customers_with_open_orders",
-    "q10_rollup_orders",
-    "q11_cube_lineitem",
-    "q13_event_gaps",
-    "q14_running_customer_spend",
-    "q15_nation_set_ops",
-    "q16_distinct_segments",
-    "q18_json_extract",
-    "q19_array_ops",
-    "q24_exact_median",
-    "q33_pivot_returnflag",
-    "q34_exact_variance",
-    "q35_date_arithmetic",
-    "q36_regexp_text",
-    "q37_multiset_ops",
-    "q39_scalar_in_subquery",
-    "q40_tumbling_window",
-    "q41_sliding_window",
-    "q42_session_windows",
-    "q43_dedup_events",
-    "q44_salted_skew_agg",
-    "q45_grouped_mode_udaf",
-    "q69_semantic_dedup",
-    "q75_gap_fill_locf",
-    "q81_registry_pruned_scan",
-    "q82_registry_sync_lifecycle",
-    "q83_notin_supplier_cnt",
-    "q84_disjunctive_join_revenue",
-    "q85_correlated_max_qty",
-    "q95_compaction_lifecycle",
-    "q102_schema_evolution",
-    "q106_chain_components",
-    "q117_bloom_incremental_dedup",
-    "q119_scd2_intervals",
-    "q120_funnel_conversion",
-    "q121_bigram_lm_quality",
-    "q122_rolling_7d_revenue",
-    "q123_copurchase_triangles",
-    "q124_retention_cohorts",
-    "q125_event_trigrams",
-    "q126_snapshot_cdc",
-    "q127_vocab_build",
-    "q128_price_size_skyline",
-    "q129_audio_energy_segments",
-    "q130_robust_source_stats",
-    "q131_temperature_mix",
-    "q132_posting_blocks",
-    # (2) rule-2 obligation carried from round 7: assets_from_documents
-    # gained the key-frame repartition (multimodal.py _spread) late in
-    # round 7; q91/q92/q129 were windowed then/now but q90 had no slot —
-    # it windows here (the set is exactly full: 50/50, zero spare; round
-    # 8 registers NO new queries — WINDOW.md)
-    "q90_media_features",
-)
-
-
-
-
 def _ordered(registry: dict[str, Query]) -> dict[str, Query]:
     """Registry reordered for the driver: _DRIVER_ORDER first, the rest in
     registration order."""

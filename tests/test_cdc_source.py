@@ -1066,3 +1066,37 @@ def test_visibility_mask_vectorized_matches_tuple_reference(tmp_path):
     # dels=None (file removed at that side): nothing visible
     assert not _IceIncStreamReader._visibility_mask(
         tbl, part, None).any()
+
+
+def test_visibility_mask_refuses_nonconforming_key_type(tmp_path):
+    """An equality-delete file whose key column has the wrong kind of
+    type (string against a long data column) fails with a ValueError
+    naming the delete file, the key column and both types."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hadoop_sync_spark.cdc_source import (
+        _ICE_EQ,
+        _IceChangePart,
+        _IceIncStreamReader,
+    )
+
+    tbl = pa.table({"k": pa.array([1, 2, 3], pa.int64())})
+    eq = str(tmp_path / "eq-str.parquet")
+    pq.write_table(pa.table({"k": pa.array(["1", "x"])}), eq)
+    part = _IceChangePart(
+        abs_path="", raw_path="data.parquet", seq=1, snapshot_id=1,
+        role="insert", dels_before=(), dels_after=(), pv={},
+        out_cols=("k",), arrow_schema=None, variants={})
+    with pytest.raises(ValueError) as ei:
+        _IceIncStreamReader._visibility_mask(
+            tbl, part, ((eq, _ICE_EQ, 9, ((1, "k"),)),))
+    msg = str(ei.value)
+    for part_of_msg in ("eq-str.parquet", "'k'", "string", "int64"):
+        assert part_of_msg in msg
+    # a promoted key type (int -> long) still matches
+    eq32 = str(tmp_path / "eq-int.parquet")
+    pq.write_table(pa.table({"k": pa.array([2], pa.int32())}), eq32)
+    mask = _IceIncStreamReader._visibility_mask(
+        tbl, part, ((eq32, _ICE_EQ, 9, ((1, "k"),)),))
+    assert mask.tolist() == [True, False, True]

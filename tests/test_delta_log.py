@@ -13,6 +13,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from hadoop_sync_spark import rowlevel
 from hadoop_sync_spark.delta_log import DeltaLog
 
 SCHEMA_JSON = json.dumps(
@@ -1650,8 +1651,8 @@ def test_delete_where_writes_dvs_one_commit(spark, tmp_path):
     # over the driver cap -> the EXECUTOR tier (round 12) commits the
     # same delete instead of refusing: bitmaps union with the existing
     # DVs and write from workers, the driver sees per-file rows only
-    log.DELETE_WHERE_ROW_LIMIT = 0
-    try:
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(rowlevel, "DRIVER_ROW_LIMIT", 0)
         res4 = log.delete_where(spark, {"k": (5, 5)}, now_ms=4000)
         assert res4["rows_deleted"] == 1 and res4["files"] == 1
         assert [r.k for r in log.read(spark).collect()] == []
@@ -1660,11 +1661,6 @@ def test_delete_where_writes_dvs_one_commit(spark, tmp_path):
         res5 = log.delete_where(spark, {"k": (1, 5)}, now_ms=5000)
         assert res5 == {"version": None, "files": 0, "rows_deleted": 0}
         assert log.latest_version() == v
-        # inline storage cannot hold an over-cap vector: honest refusal
-        with pytest.raises(NotImplementedError, match="file-backed"):
-            log.delete_where(spark, {"k": (None, None)}, storage="i")
-    finally:
-        del log.DELETE_WHERE_ROW_LIMIT
 
 
 def test_delete_where_mapped_and_partition_guards(spark, tmp_path):
@@ -2244,8 +2240,8 @@ def test_merge_upsert_partitioned(spark, tmp_path):
     with pytest.raises(NotImplementedError, match="partition column"):
         log.merge_upsert(spark, src, "p")
     # executor tier composes with the partitioned split
-    log.DELETE_WHERE_ROW_LIMIT = 0
-    try:
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(rowlevel, "DRIVER_ROW_LIMIT", 0)
         src3 = spark.createDataFrame([(7, 701, 1), (9, 900, 0)],
                                      ["k", "v", "p"])
         res3 = log.merge_upsert(spark, src3, "k", now_ms=3000)
@@ -2253,8 +2249,6 @@ def test_merge_upsert_partitioned(spark, tmp_path):
         got = {(r.k, r.v, r.p) for r in log.read(spark).collect()}
         assert (7, 701, 1) in got and (9, 900, 0) in got
         assert (7, 700, 1) not in got
-    finally:
-        del log.DELETE_WHERE_ROW_LIMIT
 
 
 @pytest.mark.slow
@@ -2298,8 +2292,8 @@ def test_update_where_executor_tier_over_cap(spark, tmp_path):
                                       partitionValues={"p": "1"})])
     # existing DV on k=2: the over-cap update must not resurrect it
     log.delete_where(spark, {"k": (2, 2)}, now_ms=500)
-    log.DELETE_WHERE_ROW_LIMIT = 0
-    try:
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(rowlevel, "DRIVER_ROW_LIMIT", 0)
         res = log.update_where(
             spark, {"k": (2, 4)},
             {"v": F.col("k") + 1000, "k": 99}, now_ms=1000)
@@ -2314,8 +2308,6 @@ def test_update_where_executor_tier_over_cap(spark, tmp_path):
             "version": None, "files": 0, "new_files": 0,
             "rows_updated": 0}
         assert log.latest_version() == v
-    finally:
-        del log.DELETE_WHERE_ROW_LIMIT
 
 
 @pytest.mark.slow
@@ -2328,8 +2320,8 @@ def test_merge_upsert_executor_tier_over_cap(spark, tmp_path):
     _write_file(d, "a.parquet", {"k": [1, 2, 3], "v": [10, 20, 30]})
     log.commit(0, [{"protocol": {"minReaderVersion": 1}}, _meta(),
                    log.add_action_for("a.parquet")])
-    log.DELETE_WHERE_ROW_LIMIT = 0
-    try:
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(rowlevel, "DRIVER_ROW_LIMIT", 0)
         src = spark.createDataFrame([(2, 200), (9, 900)], ["k", "v"])
         res = log.merge_upsert(spark, src, "k", now_ms=1000)
         assert res["rows_matched"] == 1 and res["rows_inserted"] == 2
@@ -2350,16 +2342,10 @@ def test_merge_upsert_executor_tier_over_cap(spark, tmp_path):
         _write_file(d2, "a.parquet", {"k": [1], "v": [10]})
         log2.commit(0, [{"protocol": {"minReaderVersion": 1}}, _meta(),
                         log2.add_action_for("a.parquet")])
-        log2.DELETE_WHERE_ROW_LIMIT = 0
-        try:
-            src3 = spark.createDataFrame([(7, 70)], ["k", "v"])
-            res3 = log2.merge_upsert(spark, src3, "k", now_ms=1000)
-            assert res3["rows_matched"] == 0
-            assert log2.snapshot().protocol == {"minReaderVersion": 1}
-        finally:
-            del log2.DELETE_WHERE_ROW_LIMIT
-    finally:
-        del log.DELETE_WHERE_ROW_LIMIT
+        src3 = spark.createDataFrame([(7, 70)], ["k", "v"])
+        res3 = log2.merge_upsert(spark, src3, "k", now_ms=1000)
+        assert res3["rows_matched"] == 0
+        assert log2.snapshot().protocol == {"minReaderVersion": 1}
 
 
 def _cdf_meta(partition_cols=()):
@@ -2455,8 +2441,9 @@ def test_change_data_feed_partitioned_and_executor_tier(spark,
                                       partitionValues={"p": "0"}),
                    log.add_action_for("b.parquet",
                                       partitionValues={"p": "1"})])
-    log.DELETE_WHERE_ROW_LIMIT = 0  # executor tier for every face
-    try:
+    with pytest.MonkeyPatch.context() as mp:
+        # executor tier for every face
+        mp.setattr(rowlevel, "DRIVER_ROW_LIMIT", 0)
         log.update_where(spark, {"k": (2, 3)},
                          {"v": F.col("v") + 1}, now_ms=1000)
         ev = {(r.k, r.v, r.p, r._change_type)
@@ -2478,8 +2465,6 @@ def test_change_data_feed_partitioned_and_executor_tier(spark,
         assert ev3 == {(3, 31, 1, "update_preimage"),
                        (3, 300, 1, "update_postimage"),
                        (8, 80, 2, "insert")}
-    finally:
-        del log.DELETE_WHERE_ROW_LIMIT
     # deletes a second time are no-ops: no cdc rows, no commit
     v = log.latest_version()
     assert log.delete_where(spark, {"k": (1, 1)}) == {

@@ -49,6 +49,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from hadoop_sync_spark import rowlevel
 from hadoop_sync_spark.delta_log import DeltaLog
 from hadoop_sync_spark.iceberg_meta import (
     DataFile,
@@ -896,32 +897,25 @@ def test_dml_sequence_partitioned_merge(spark, tmp_path, seed):
                   partitioned=True, partitioned_merge=True)
 
 
-@pytest.mark.slow
-@pytest.mark.parametrize("seed", [1201, *_slow(1217)])
-def test_dml_sequence_delta_executor_tier(spark, tmp_path, seed,
-                                          monkeypatch):
-    # round 12: force EVERY Delta delete/update/merge through the
-    # over-cap EXECUTOR tier (cap 0 — bitmaps union/serialize/write on
-    # workers, updated copies join the distributed matched frame, merge
-    # keys semi-join) while Iceberg stays on its driver tier; every
-    # step must still read back the shared model on BOTH twins, so the
-    # two tiers are proven equivalent on the same op sequence
-    monkeypatch.setattr(DeltaLog, "DELETE_WHERE_ROW_LIMIT", 0)
-    _run_sequence(spark, tmp_path, seed, n_ops=9, mapped=False)
+#: op count per executor-tier seed.  The default seed 1314 updates,
+#: merges, deletes over the merge's deletes and merges again, each
+#: matching rows on both formats; seed 1303's predicates match no rows,
+#: so it rides the slow tier with the rest.
+_EXECUTOR_TIER_OPS = {1314: 6, 1201: 9, 1217: 9, 1303: 10, 1306: 10}
 
 
-@pytest.mark.slow
-@pytest.mark.parametrize("seed", [1303, *_slow(1306)])
-def test_dml_sequence_iceberg_executor_tier(spark, tmp_path, seed,
-                                            monkeypatch):
-    # the Iceberg twin's executor tier: cap 0 routes delete_rows
-    # through the distributed position-delete write, update_rows
-    # through the distributed rewrite (round 12 lifted its refusal
-    # last) and merge_upsert through the distributed equality-delete
-    # write — full op mix, both twins at cap 0, model-checked.
-    monkeypatch.setattr(IcebergTable, "DELETE_ROWS_LIMIT", 0)
-    monkeypatch.setattr(DeltaLog, "DELETE_WHERE_ROW_LIMIT", 0)
-    _run_sequence(spark, tmp_path, seed, n_ops=10, mapped=False)
+@pytest.mark.parametrize("seed", [1314, *_slow(1201, 1217, 1303, 1306)])
+def test_dml_sequence_executor_tier(spark, tmp_path, seed, monkeypatch):
+    # the one tier crossover at 0 routes every delete/update/merge on
+    # BOTH formats through the executor tier: Delta bitmaps union,
+    # serialize and write on workers, Iceberg position/equality delete
+    # parquets write straight from the distributed frames, updated
+    # copies join the distributed matched frame and Delta merge keys
+    # semi-join.  Every step must still read back the shared model on
+    # both twins, so the tiers are proven equivalent.
+    monkeypatch.setattr(rowlevel, "DRIVER_ROW_LIMIT", 0)
+    _run_sequence(spark, tmp_path, seed, n_ops=_EXECUTOR_TIER_OPS[seed],
+                  mapped=False)
 
 
 @pytest.mark.slow

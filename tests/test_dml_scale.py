@@ -18,16 +18,18 @@ import os
 import pyarrow.parquet as pq
 import pytest
 
+from hadoop_sync_spark import rowlevel
 from hadoop_sync_spark.delta_log import DeltaLog
 from hadoop_sync_spark.iceberg_meta import DataFile, IcebergTable
 
-#: slow tier (round 14): >1M-row executor-tier scale studies — the
-#: executor-tier code paths themselves stay default-covered at cap 0 by
-#: test_dml_fuzz's executor-tier seeds; these runs prove them at the
-#: REAL cap and ride SPARK_GRAFT_FULL_TESTS=1
+#: slow tier: >1M-row executor-tier scale studies.  The executor-tier
+#: code paths stay default-covered at cap 0 by seed 1314 of
+#: test_dml_fuzz.py::test_dml_sequence_executor_tier (both formats) and
+#: the cap-0 unit tests in test_delta_log.py / test_iceberg.py; these
+#: runs prove them at the REAL cap and ride SPARK_GRAFT_FULL_TESTS=1
 pytestmark = pytest.mark.slow
 
-N = 1_200_000  # > DELETE_WHERE_ROW_LIMIT / DELETE_ROWS_LIMIT = 1M
+N = 1_200_000  # > rowlevel.DRIVER_ROW_LIMIT = 1M
 
 
 def _spark_write_kv(spark, path: str, lo: int, hi: int) -> int:
@@ -67,7 +69,7 @@ def test_delta_delete_where_over_one_million(spark, tmp_path):
         log.add_action_for("a.parquet"),
         log.add_action_for("b.parquet"),
     ])
-    assert log.DELETE_WHERE_ROW_LIMIT == 1_000_000  # the REAL cap
+    assert rowlevel.DRIVER_ROW_LIMIT == 1_000_000  # the REAL cap
     # matches N - 10 rows, over the cap -> executor tier
     res = log.delete_where(spark, {"k": (10, None)}, now_ms=1000)
     assert res["rows_deleted"] == N - 10
@@ -98,7 +100,7 @@ def test_iceberg_delete_rows_over_one_million(spark, tmp_path):
                       os.path.getsize(p))],
             now_ms=2000,
         )
-    assert t.DELETE_ROWS_LIMIT == 1_000_000  # the REAL cap
+    assert rowlevel.DRIVER_ROW_LIMIT == 1_000_000  # the REAL cap
     n = t.delete_rows(spark, {"k": (10, None)}, now_ms=3000)
     assert n == N - 10
     # delete parquet(s) landed executor-side, globally sorted
@@ -125,7 +127,7 @@ def test_iceberg_update_rows_over_one_million(spark, tmp_path):
     _spark_write_kv(spark, p, 0, N)
     t.append([DataFile("data/f1.parquet", {}, N, os.path.getsize(p))],
              now_ms=2000)
-    assert t.DELETE_ROWS_LIMIT == 1_000_000
+    assert rowlevel.DRIVER_ROW_LIMIT == 1_000_000
     from pyspark.sql import functions as F
 
     n = t.update_rows(spark, {"k": (5, None)},

@@ -20,6 +20,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from hadoop_sync_spark import rowlevel
 from hadoop_sync_spark.iceberg_meta import DataFile, IcebergTable
 
 
@@ -1761,8 +1762,8 @@ def test_delete_rows_predicate_position_deletes(spark, tmp_path):
         t.delete_rows(spark, {"nope": (1, 2)})
     # over the driver cap -> the EXECUTOR tier (round 12) writes the
     # position-delete parquet straight from the distributed frame
-    t.DELETE_ROWS_LIMIT = 0
-    try:
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(rowlevel, "DRIVER_ROW_LIMIT", 0)
         assert t.delete_rows(spark, {"id": (5, 5)}, now_ms=7500) == 1
         assert sorted(r.id for r in t.read(spark).collect()) == [2]
         # spec sort order holds inside the executor-written file
@@ -1782,8 +1783,6 @@ def test_delete_rows_predicate_position_deletes(spark, tmp_path):
                              {"val": "X2"}, now_ms=7800) == 1
         assert {(r.id, r.val) for r in t.read(spark).collect()} == {
             (2, "X2")}
-    finally:
-        del t.DELETE_ROWS_LIMIT
     # renamed histories work (round 12 lifted the refusal): the
     # predicate scan resolves by name variant, so rows in PRE-rename
     # files still match — and predicates on the renamed column itself

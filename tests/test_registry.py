@@ -245,7 +245,8 @@ def test_cli_register_sync_diff(spark, tmp_path, capsys):
 
     data = tmp_path / "t"
     data.mkdir()
-    spark.range(0, 10).write.parquet(str(data / "a.parquet"))
+    # exactly one file at any core count: diff must report "1 new"
+    spark.range(0, 10).coalesce(1).write.parquet(str(data / "a.parquet"))
     meta = str(tmp_path / "m")
 
     assert main(["register", meta, "t", str(data)]) == 0
